@@ -30,7 +30,6 @@ from pyspark.sql import functions as F
 
 from features_engineering_of_motion_data_spark.session import get_spark
 from features_engineering_of_motion_data_spark.operators.channels import (
-    dedup_turns,
     derive_channels,
 )
 from features_engineering_of_motion_data_spark.operators.features import (
@@ -87,11 +86,11 @@ def main() -> None:
 
     cached = os.environ.get("SPARK_GRAFT_NO_CACHE") != "1"
     # JIT warmup on a slice (not counted)
-    force(aggregate_tier(derive_channels(dedup_turns(turns.limit(100_000))), "1m"))
+    force(aggregate_tier(derive_channels(turns.limit(100_000)), "1m"))
 
     cpu0 = _proc_cpu_s()
     t0 = time.perf_counter()
-    s1m = aggregate_tier(derive_channels(dedup_turns(turns)), "1m")
+    s1m = aggregate_tier(derive_channels(turns), "1m")
     if cached:
         s1m = s1m.persist()
     pts = force(finalize_features(s1m))

@@ -45,7 +45,6 @@ from features_engineering_of_motion_data_spark.fixtures import (
     ensure_transcripts_parquet,
 )
 from features_engineering_of_motion_data_spark.operators.channels import (
-    dedup_turns,
     derive_channels,
 )
 from features_engineering_of_motion_data_spark.operators.features import (
@@ -156,11 +155,11 @@ def main() -> None:
 
     # --- headline: tier cascade on bench transcripts -------------------------
     turns = read_transcripts(spark, transcripts_path)
-    channels = derive_channels(dedup_turns(turns))
+    channels = derive_channels(turns)
 
     # warmup: run the full operator pipeline on a slice so codegen/JIT and
     # parquet footer caching don't pollute the steady-state measurement
-    _force(aggregate_tier(derive_channels(dedup_turns(turns.limit(100_000))), "1m"))
+    _force(aggregate_tier(derive_channels(turns.limit(100_000)), "1m"))
 
     reps = int(os.environ.get("SPARK_GRAFT_BENCH_REPS", "3"))
     for _ in range(reps):
@@ -210,7 +209,7 @@ def main() -> None:
     # scaling child: 1m aggregated once and persisted, 1h/1d merged from it.
     if os.environ.get("SPARK_GRAFT_BENCH_4X", "1") != "0":
         turns_4x = read_transcripts(spark, ensure_transcripts_parquet("bench4x"))
-        ch_4x = derive_channels(dedup_turns(turns_4x))
+        ch_4x = derive_channels(turns_4x)
         for _ in range(max(1, reps - 1)):
             t0 = time.perf_counter()
             s1m = aggregate_tier(ch_4x, "1m").persist(StorageLevel.MEMORY_AND_DISK)
@@ -245,7 +244,7 @@ def main() -> None:
         "_d", F.col("turn_idx") > (F.max("turn_idx").over(w) * 0.99).cast("int")
     )
     old_1m = aggregate_tier(
-        derive_channels(dedup_turns(tagged.filter(~F.col("_d")).drop("_d"))), "1m"
+        derive_channels(tagged.filter(~F.col("_d")).drop("_d")), "1m"
     ).persist(StorageLevel.MEMORY_AND_DISK)
     _force(old_1m)
     delta = tagged.filter(F.col("_d")).drop("_d").persist(StorageLevel.MEMORY_AND_DISK)

@@ -4,50 +4,66 @@ The transcripts table becomes a long-format integer signal table
 ``(conv_id, channel, turn_idx, ts_us, x, prev_x, prev_ts_us)`` with one
 window pass per conversation. All channel values are exact integers
 (DESIGN.md §1); ``prev_*`` columns let every retention tier compute its own
-zero-crossing indicator without another shuffle.
+zero-crossing indicator without another shuffle. The one hash(conv_id)
+exchange carries scalars plus a 16-byte text digest, never the text.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-# sorts-last sentinel for null text in the dedup tie-break (DESIGN.md §4)
-_NULL_LAST = "￿"
+
+def _digest(text: Column) -> Column:
+    """16-byte md5 of the UTF-8 text (NULL for null text). Compared as
+    unsigned bytes with nulls last, it orders exactly like the lowercase hex
+    digest with a sorts-last sentinel for null (DESIGN.md §4)."""
+    return F.unhex(F.md5(text.cast("binary")))
 
 
-def dedup_turns(df: DataFrame) -> DataFrame:
-    """P4: keep the first row per (conv_id, turn_idx) under the deterministic
-    tie-break (ts asc, md5(text) asc, nulls last).
+def _keep_first(df: DataFrame, ts: str) -> DataFrame:
+    """Keep the first row per (conv_id, turn_idx) under the deterministic
+    tie-break (``ts`` asc, ``_h`` asc nulls last), then drop ``_h``.
 
-    Deliberately windowed by ``conv_id`` alone (ordered by turn_idx, ts, md5)
-    rather than by (conv_id, turn_idx): ``HashPartitioning(conv_id)``
-    satisfies the clustering required by every downstream window/groupBy in
-    the pipeline (all key on conv_id supersets), so dedup → channels → tier
-    aggregation → full cascade runs on a SINGLE shuffle.
+    Windowed by ``conv_id`` alone (ordered by turn_idx, ts, digest) rather
+    than by (conv_id, turn_idx): ``HashPartitioning(conv_id)`` satisfies the
+    clustering required by every downstream window/groupBy in the pipeline
+    (all key on conv_id supersets), so dedup → channels → tier aggregation →
+    full cascade runs on a SINGLE shuffle.
     """
     w = Window.partitionBy("conv_id").orderBy(
-        F.col("turn_idx").asc(),
-        F.col("ts").asc(),
-        F.coalesce(F.md5(F.col("text").cast("binary")), F.lit(_NULL_LAST)).asc(),
+        F.col("turn_idx").asc(), F.col(ts).asc(), F.col("_h").asc_nulls_last()
     )
     dup = F.lag("turn_idx").over(w) == F.col("turn_idx")
     return (
         df.withColumn("_dup", F.coalesce(dup, F.lit(False)))
         .filter(~F.col("_dup"))
-        .drop("_dup")
+        .drop("_dup", "_h")
     )
 
 
-def derive_channels(df: DataFrame) -> DataFrame:
-    """P1 + W1 + melt: per-turn integer channel values in long format with
-    per-channel previous observations (``prev_x``, ``prev_ts_us``).
+def dedup_turns(df: DataFrame) -> DataFrame:
+    """P4: keep the first row per (conv_id, turn_idx) under the deterministic
+    tie-break (ts asc, md5(text) asc, nulls last). Every input column is
+    kept, so this exchange carries the full rows, ``text`` included;
+    :func:`derive_channels` applies the same rule to narrowed rows."""
+    return _keep_first(df.withColumn("_h", _digest(F.col("text"))), "ts")
 
-    Everything is computed in ONE window pass over ``(conv_id) ORDER BY
-    turn_idx`` *before* the melt, so the pipeline does a single sort and a
-    single hash(conv_id) exchange which the downstream tier groupBy reuses
-    (HashPartitioning on a key subset satisfies the clustering). The melt
-    itself is a narrow ``stack``. Channel-series adjacency tricks:
+
+def derive_channels(turns: DataFrame) -> DataFrame:
+    """P4 + P1 + W1 + melt: dedup raw turns, then per-turn integer channel
+    values in long format with per-channel previous observations
+    (``prev_x``, ``prev_ts_us``).
+
+    The rows are narrowed to scalars before the hash(conv_id) exchange:
+    conv_id, turn_idx, ts_us, text length, the tool flag and the 16-byte
+    text digest that breaks dedup ties. ``text`` itself never crosses the
+    shuffle. Dedup (the same keep-first rule as :func:`dedup_turns`) and
+    every channel value are computed in ONE sort over ``(conv_id) ORDER BY
+    turn_idx, ts_us, digest`` *before* the melt, so the pipeline does a
+    single sort and a single exchange which the downstream tier groupBy
+    reuses (HashPartitioning on a key subset satisfies the clustering). The
+    melt itself is a narrow ``stack``. Channel-series adjacency tricks:
 
     * latency channel: element i's predecessor is the latency at the previous
       turn = ``lag(ts,1) − lag(ts,2)`` — expressed with plain lags to avoid a
@@ -57,14 +73,15 @@ def derive_channels(df: DataFrame) -> DataFrame:
     """
     w = Window.partitionBy("conv_id").orderBy("turn_idx")
     wprev = w.rowsBetween(Window.unboundedPreceding, -1)
-    text_len = F.when(F.col("text").isNotNull(), F.length("text").cast("long"))
-    base = df.select(
+    narrow = turns.select(
         "conv_id",
         "turn_idx",
         F.unix_micros("ts").alias("ts_us"),
-        text_len.alias("text_len"),
+        F.length("text").cast("long").alias("text_len"),
         F.col("tool").isNotNull().cast("long").alias("tool_cadence"),
-    ).select(
+        _digest(F.col("text")).alias("_h"),
+    )
+    base = _keep_first(narrow, "ts_us").select(
         "conv_id",
         "turn_idx",
         "ts_us",

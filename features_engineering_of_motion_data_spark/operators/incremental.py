@@ -54,7 +54,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .channels import dedup_turns, derive_channels
+from .channels import derive_channels
 from .features import TIER_US, aggregate_tier, finalize_features
 from .rollup import rollup_merge
 
@@ -170,7 +170,7 @@ def delta_tier_stats(old_stats: DataFrame, delta_turns: DataFrame, tier: str) ->
     delta_convs = delta_turns.select("conv_id").distinct()
     phantoms = seam_phantoms(old_stats, delta_convs)
     full = phantoms.unionByName(delta_turns.select(*phantoms.columns))
-    channels = derive_channels(dedup_turns(full)).filter(F.col("turn_idx") >= 0)
+    channels = derive_channels(full).filter(F.col("turn_idx") >= 0)
     return aggregate_tier(channels, tier)
 
 

@@ -25,11 +25,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from .features import TIER_US, aggregate_tier, finalize_features
-
-
-def _sign(col):
-    return F.when(col < 0, F.lit(-1)).otherwise(F.lit(1))
+from .features import TIER_US, _sign, aggregate_tier, finalize_features
 
 
 def rollup_merge(stats: DataFrame, to_tier: str) -> DataFrame:

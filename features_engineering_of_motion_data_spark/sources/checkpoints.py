@@ -15,15 +15,30 @@ import time
 
 
 def load_manifest(path: str) -> list[dict]:
+    """Records of a manifest. An unterminated last line is the torn write of
+    a crash inside :func:`append_record`: that part never committed its
+    record, so it is skipped and the part reruns. A corrupt line that is
+    followed by others is damage, not a torn append, and raises."""
     if not os.path.exists(path):
         return []
-    out = []
     with open(path, encoding="utf-8") as f:
-        for line in f:
-            line = line.strip()
-            if line:
-                out.append(json.loads(line))
-    return out
+        # the piece after the last newline is "" when the file ends cleanly,
+        # and the torn record otherwise: drop it either way
+        lines = f.read().split("\n")[:-1]
+    return [json.loads(line) for line in lines if line.strip()]
+
+
+def _drop_torn_tail(path: str) -> None:
+    """Cut an unterminated last line, so the next record starts a line."""
+    with open(path, "rb+") as f:
+        end = f.seek(0, os.SEEK_END)
+        if end == 0:
+            return
+        f.seek(end - 1)
+        if f.read(1) == b"\n":
+            return
+        f.seek(0)
+        f.truncate(f.read().rfind(b"\n") + 1)
 
 
 def completed_parts(records: list[dict], snapshot_id: str) -> set[int]:
@@ -59,6 +74,8 @@ def append_record(
         "finished_at": time.strftime("%Y-%m-%dT%H:%M:%SZ", time.gmtime()),
     }
     os.makedirs(os.path.dirname(os.path.abspath(path)), exist_ok=True)
+    if os.path.exists(path):
+        _drop_torn_tail(path)
     with open(path, "a", encoding="utf-8") as f:
         f.write(json.dumps(rec, sort_keys=True) + "\n")
         f.flush()

@@ -16,11 +16,13 @@ deliver, produced at Spark scale.
 
 Scale shape: the whole job is the cascade's own single hash(conv_id)
 exchange (see operators/matrix.py — conditional aggregation, not a pivot
-of the long tier table) followed by the date-partitioned write's range
-exchange; row counts are captured with ``DataFrame.observe`` in the write
-action itself, so the output is never re-read.  Reruns are idempotent:
-the write is an overwrite, and the manifest is written only after the
-write commits.
+of the long tier table) followed by the date-partitioned write's one
+rebalance exchange on ``bucket_date``.  AQE splits an oversized date and
+merges small ones at run time, so scan → dedup/channel window →
+aggregation runs once per write, with no sampling pass.  Row counts are
+captured with ``DataFrame.observe`` in the write action itself, so the
+output is never re-read.  Reruns are idempotent: the write is an
+overwrite, and the manifest is written only after the write commits.
 """
 
 from __future__ import annotations
@@ -36,7 +38,6 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 from pyspark.sql import functions as F
 
 from features_engineering_of_motion_data_spark.operators.channels import (
-    dedup_turns,
     derive_channels,
 )
 from features_engineering_of_motion_data_spark.operators.matrix import (
@@ -85,13 +86,12 @@ def parse_args(argv=None):
     return p.parse_args(argv)
 
 
-def run(args) -> int:
-    from pyspark.sql import Observation
-
-    spark = get_spark(master=args.master, app_name="feature-matrix")
-    snapshot = args.snapshot or resolve_snapshot(args.input)
+def matrix_frame(spark, args, snapshot: str):
+    """The matrix rows as the job writes them: laid out one ``bucket_date``
+    per write task (AQE rebalance) and sorted by (conv_id, bucket_start)
+    inside each file."""
     turns = read_transcripts(spark, args.input, snapshot_id=snapshot)
-    ch = derive_channels(dedup_turns(turns))
+    ch = derive_channels(turns)
     # `is not None`, not truthiness: --rolling 0 must reach rolling_merge's
     # width>=1 ValueError, not silently fall back to the per-bucket matrix
     # (and overwrite the unsuffixed tier=<tier> output)
@@ -99,22 +99,25 @@ def run(args) -> int:
         matrix = wide_rolling_matrix(ch, args.tier, args.rolling)
     else:
         matrix = wide_tier_matrix(ch, args.tier)
-    obs = Observation("matrix")
-    matrix = matrix.withColumn("bucket_date", F.to_date(F.col("bucket_start")))
+    return (
+        matrix.withColumn("bucket_date", F.to_date(F.col("bucket_start")))
+        .hint("rebalance", "bucket_date")
+        .sortWithinPartitions("conv_id", "bucket_start")
+    )
 
+
+def run(args) -> int:
+    from pyspark.sql import Observation
+
+    spark = get_spark(master=args.master, app_name="feature-matrix")
+    snapshot = args.snapshot or resolve_snapshot(args.input)
+    obs = Observation("matrix")
     # rolling matrices live beside (not over) the per-bucket one
     suffix = f"_roll{args.rolling}" if args.rolling is not None else ""
     out = os.path.join(args.output, f"tier={args.tier}{suffix}")
     (
-        matrix.repartitionByRange(
-            max(spark.sparkContext.defaultParallelism, 1),
-            "bucket_date",
-            "conv_id",
-        )
-        .sortWithinPartitions("conv_id", "bucket_start")
-        # the metrics node sits ABOVE the range exchange: the range
-        # partitioner's bounds-sampling pass re-executes the exchange's
-        # child, so an observe below it would double-count every row
+        matrix_frame(spark, args, snapshot)
+        # above the rebalance exchange: counts the rows as they are written
         .observe(obs, F.count(F.lit(1)).alias("rows"))
         .write.mode("overwrite")
         .partitionBy("bucket_date")

@@ -58,7 +58,6 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 from pyspark.sql import functions as F
 
 from features_engineering_of_motion_data_spark.operators.channels import (
-    dedup_turns,
     derive_channels,
 )
 from features_engineering_of_motion_data_spark.operators.features import (
@@ -180,7 +179,7 @@ def _build_stage(spark, args, snapshot: str, finest: str, stage_dir: str) -> dic
     obs = Observation()
     turns = _observe_parts(turns, obs, args.num_parts)
     t0 = time.perf_counter()
-    stats = aggregate_tier(derive_channels(dedup_turns(turns)), finest)
+    stats = aggregate_tier(derive_channels(turns), finest)
     staged = stats.withColumn("part", _part_expr(args.num_parts))
     return _write_stage(
         stage_dir, staged, lambda: dict(obs.get), args, snapshot, finest, t0
@@ -308,7 +307,7 @@ def _write_archive(spark, args, snapshot: str) -> None:
     )
 
     turns = read_transcripts(spark, args.input, snapshot_id=snapshot)
-    arch = build_archive(derive_channels(dedup_turns(turns)), tier="1h")
+    arch = build_archive(derive_channels(turns), tier="1h")
     arch = arch.withColumn("part", _part_expr(args.num_parts))
     obs = Observation()
     arch = arch.observe(

@@ -14,7 +14,6 @@ from features_engineering_of_motion_data_spark.operators.archive import (
     decode_archive,
 )
 from features_engineering_of_motion_data_spark.operators.channels import (
-    dedup_turns,
     derive_channels,
 )
 from features_engineering_of_motion_data_spark.operators.gapfill import (
@@ -30,7 +29,7 @@ KEY = ["conv_id", "channel", "turn_idx"]
 
 @pytest.fixture(scope="module")
 def channels(spark, tiny_path):
-    df = derive_channels(dedup_turns(read_transcripts(spark, tiny_path)))
+    df = derive_channels(read_transcripts(spark, tiny_path))
     df = df.select("conv_id", "channel", "turn_idx", "ts_us", "x").cache()
     df.count()
     return df

@@ -14,7 +14,6 @@ import pandas as pd
 import pytest
 
 from features_engineering_of_motion_data_spark.operators.channels import (
-    dedup_turns,
     derive_channels,
 )
 from features_engineering_of_motion_data_spark.operators.features import (
@@ -65,7 +64,7 @@ def test_job_month_tier_bit_equal_to_operator(spark, tiny_path, tmp_path):
     got = _canon(pd.read_parquet(os.path.join(out, "tier=month")))
 
     turns = read_transcripts(spark, tiny_path)
-    stats = aggregate_tier(derive_channels(dedup_turns(turns)), "1m")
+    stats = aggregate_tier(derive_channels(turns), "1m")
     want = _canon(finalize_features(rollup_merge_calendar(stats, "month")).toPandas())
 
     assert list(got.columns) == list(want.columns)
@@ -91,7 +90,7 @@ def test_retention_policy_covers_calendar_tier(spark, tiny_path, tmp_path):
     from pyspark.sql import functions as F
 
     turns = read_transcripts(spark, tiny_path)
-    stats = aggregate_tier(derive_channels(dedup_turns(turns)), "1h")
+    stats = aggregate_tier(derive_channels(turns), "1h")
     month1 = finalize_features(rollup_merge_calendar(stats, "month"))
     # the tiny fixture spans one calendar month; retention needs >= 2
     # partitions, so add a shifted copy (values are irrelevant to expiry —

@@ -20,7 +20,6 @@ import pytest
 from pyspark.sql import functions as F
 
 from features_engineering_of_motion_data_spark.operators.channels import (
-    dedup_turns,
     derive_channels,
 )
 from features_engineering_of_motion_data_spark.operators.features import (
@@ -39,7 +38,7 @@ from features_engineering_of_motion_data_spark.sources.transcripts import (
 
 @pytest.fixture(scope="module")
 def channels_df(spark, tiny_path):
-    return derive_channels(dedup_turns(read_transcripts(spark, tiny_path)))
+    return derive_channels(read_transcripts(spark, tiny_path))
 
 
 def _pivoted_long_form(channels_df, tier):
@@ -138,7 +137,7 @@ def test_features_job_cli(tiny_path, tmp_path, spark):
 
     # the matrix content equals computing it in-session from the same input
     expect = wide_tier_matrix(
-        derive_channels(dedup_turns(read_transcripts(spark, tiny_path))), "1h"
+        derive_channels(read_transcripts(spark, tiny_path)), "1h"
     )
     got = back.drop("bucket_date")
     assert got.exceptAll(expect).count() == 0
@@ -220,7 +219,7 @@ def test_features_job_rolling_cli(tiny_path, tmp_path, spark):
     back = spark.read.parquet(os.path.join(out, "tier=1h_roll24"))
     assert back.count() == manifest["rows"]
     expect = wide_rolling_matrix(
-        derive_channels(dedup_turns(read_transcripts(spark, tiny_path))),
+        derive_channels(read_transcripts(spark, tiny_path)),
         "1h",
         24,
     )

@@ -12,7 +12,6 @@ from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 from features_engineering_of_motion_data_spark.operators.channels import (
-    dedup_turns,
     derive_channels,
 )
 from features_engineering_of_motion_data_spark.operators.features import (
@@ -75,13 +74,13 @@ def _assert_bit_equal(got: pd.DataFrame, want: pd.DataFrame, ctx: str) -> None:
 
 def test_incremental_equals_full_recompute(spark, tiny_path, split):
     old, delta = split
-    old_1m = aggregate_tier(derive_channels(dedup_turns(old)), "1m").cache()
+    old_1m = aggregate_tier(derive_channels(old), "1m").cache()
     old_1m.count()
 
     inc = incremental_cascade(old_1m, delta, TIERS)
     full = cascade_from_stats(
         aggregate_tier(
-            derive_channels(dedup_turns(read_transcripts(spark, tiny_path))), "1m"
+            derive_channels(read_transcripts(spark, tiny_path)), "1m"
         ),
         TIERS,
     )
@@ -92,7 +91,7 @@ def test_incremental_equals_full_recompute(spark, tiny_path, split):
 def test_empty_delta_is_identity(spark, split):
     """An empty append must leave every tier bit-unchanged."""
     old, delta = split
-    old_1m = aggregate_tier(derive_channels(dedup_turns(old)), "1m").cache()
+    old_1m = aggregate_tier(derive_channels(old), "1m").cache()
     old_1m.count()
     inc = incremental_cascade(old_1m, delta.filter(F.lit(False)), TIERS)
     base = cascade_from_stats(old_1m, TIERS)
@@ -105,8 +104,8 @@ def test_merge_partials_is_associative_with_parallelism(spark, split):
     shuffle partitions gives identical bits (the N-vs-4N exactness story
     extends to incremental refresh)."""
     old, delta = split
-    old_1m = aggregate_tier(derive_channels(dedup_turns(old)), "1m")
-    d_1m = aggregate_tier(derive_channels(dedup_turns(delta)), "1m")
+    old_1m = aggregate_tier(derive_channels(old), "1m")
+    d_1m = aggregate_tier(derive_channels(delta), "1m")
     a = _pdf(merge_partial_stats(old_1m.repartition(1), d_1m.repartition(1)))
     b = _pdf(merge_partial_stats(old_1m.repartition(16), d_1m.repartition(16)))
     _assert_bit_equal(a, b, "parallelism")

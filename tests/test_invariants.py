@@ -43,7 +43,7 @@ def test_text_equality_checksum(spark, tiny_path, tiny_pdf):
 def test_write_tier_and_retention(spark, tiny_path, tmp_path):
     out = str(tmp_path / "tier_1d")
     feats = features_from_turns(
-        derive_channels(dedup_turns(read_transcripts(spark, tiny_path))), "1d"
+        derive_channels(read_transcripts(spark, tiny_path)), "1d"
     )
     write_tier(feats, out)
     before = pd.read_parquet(out)

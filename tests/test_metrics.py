@@ -6,7 +6,6 @@ from __future__ import annotations
 import pandas as pd
 
 from features_engineering_of_motion_data_spark.operators.channels import (
-    dedup_turns,
     derive_channels,
 )
 from features_engineering_of_motion_data_spark.operators.features import (
@@ -20,7 +19,7 @@ from features_engineering_of_motion_data_spark.sources.transcripts import (
 
 def test_tier_metrics_exact_and_sketch(spark, tiny_path):
     stats = aggregate_tier(
-        derive_channels(dedup_turns(read_transcripts(spark, tiny_path))), "1h"
+        derive_channels(read_transcripts(spark, tiny_path)), "1h"
     ).cache()
     got = (
         tier_metrics(stats)

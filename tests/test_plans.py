@@ -11,7 +11,6 @@ import os
 import pytest
 
 from features_engineering_of_motion_data_spark.operators.channels import (
-    dedup_turns,
     derive_channels,
 )
 from features_engineering_of_motion_data_spark.operators.features import (
@@ -41,7 +40,7 @@ def test_ts_predicate_pushed_to_scan(spark, tiny_path):
 
 
 def test_column_pruning_reaches_scan(spark, tiny_path):
-    ch = derive_channels(dedup_turns(read_transcripts(spark, tiny_path)))
+    ch = derive_channels(read_transcripts(spark, tiny_path))
     plan = _plan(ch)
     scan_line = next(l for l in plan.splitlines() if "FileScan parquet" in l)
     # 'role' is never used by the channel pipeline → must be pruned
@@ -52,16 +51,66 @@ def test_column_pruning_reaches_scan(spark, tiny_path):
 def test_cascade_is_single_exchange(spark, tiny_path):
     """The load-bearing scale property: dedup → channels → 1m agg plans ONE
     exchange (hash(conv_id)), and each rollup merge adds NONE."""
-    ch = derive_channels(dedup_turns(read_transcripts(spark, tiny_path)))
+    ch = derive_channels(read_transcripts(spark, tiny_path))
     base = aggregate_tier(ch, "1m")
     assert _plan(base).count("Exchange") == 1
     assert _plan(rollup_merge(base, "1h")).count("Exchange") == 1
     assert _plan(rollup_merge(rollup_merge(base, "1h"), "1d")).count("Exchange") == 1
 
 
+def _nodes(node):
+    """Pre-order walk of a JVM physical plan, into AQE's current plan."""
+    if node.nodeName() == "AdaptiveSparkPlan":
+        node = node.executedPlan()
+    yield node
+    children = node.children()
+    for i in range(children.size()):
+        yield from _nodes(children.apply(i))
+
+
+def _exchanges(df) -> list:
+    return [n for n in _nodes(df._jdf.queryExecution().executedPlan())
+            if n.nodeName() == "Exchange"]
+
+
+def _conv_exchange_input(df) -> set[str]:
+    """Attribute names fed into the channel pipeline's hash(conv_id)
+    exchange (the plan must hold exactly one)."""
+    hits = [n for n in _exchanges(df)
+            if n.outputPartitioning().toString().startswith("hashpartitioning(conv_id")]
+    assert len(hits) == 1, [n.toString() for n in hits]
+    out = hits[0].child().output()
+    return {out.apply(i).name() for i in range(out.size())}
+
+
+def test_channel_exchange_carries_no_text(spark, tiny_path):
+    """Only scalars and the 16-byte tie-break digest cross the shuffle: the
+    dedup/channel window needs a text length and a digest, never the text."""
+    ch = derive_channels(read_transcripts(spark, tiny_path))
+    cols = _conv_exchange_input(aggregate_tier(ch, "1m"))
+    assert "text" not in cols
+    assert {"conv_id", "turn_idx", "ts_us", "text_len", "tool_cadence"} <= cols
+
+
+def test_matrix_job_write_is_one_rebalance(spark, tiny_path):
+    """The matrix job's pre-write frame: the channel exchange plus one AQE
+    rebalance on bucket_date. A range partitioner would sample its input in
+    a separate job and run the whole channel window twice."""
+    import jobs.features as fj
+
+    args = fj.parse_args(["--input", tiny_path, "--output", "-"])
+    frame = fj.matrix_frame(spark, args, None)
+    exchanges = _exchanges(frame)
+    assert len(exchanges) == 2, [n.toString() for n in exchanges]
+    assert not any("rangepartitioning" in n.outputPartitioning().toString()
+                   for n in exchanges)
+    assert "REBALANCE_PARTITIONS_BY_COL" in _plan(frame)
+    assert "text" not in _conv_exchange_input(frame)
+
+
 def test_partial_aggregation_present(spark, tiny_path):
     """Map-side combine: partial + final HashAggregate pairs."""
-    ch = derive_channels(dedup_turns(read_transcripts(spark, tiny_path)))
+    ch = derive_channels(read_transcripts(spark, tiny_path))
     plan = _plan(aggregate_tier(ch, "1m"))
     assert "partial_count" in plan and "partial_sum" in plan
 
@@ -76,7 +125,7 @@ def test_rollup_merge_reuses_cached_stats(spark, tiny_path):
     """bench.py times each tier merge against the persisted 1m frame; the
     merge plan must actually read the cache (InMemoryTableScan), not
     recompute the base aggregation from the parquet scan."""
-    ch = derive_channels(dedup_turns(read_transcripts(spark, tiny_path)))
+    ch = derive_channels(read_transcripts(spark, tiny_path))
     base = aggregate_tier(ch, "1m").persist()
     try:
         base.count()
@@ -135,7 +184,7 @@ def test_cascade_hot_path_has_no_python(spark, tiny_path):
     to the archive/gap-fill kernels). (AQE hides WholeStageCodegen wrappers
     from plan strings in Spark 4, so JVM-only execution is the assertable
     proxy for staying on the codegen path.)"""
-    ch = derive_channels(dedup_turns(read_transcripts(spark, tiny_path)))
+    ch = derive_channels(read_transcripts(spark, tiny_path))
     plan = _plan(rollup_merge(rollup_merge(aggregate_tier(ch, "1m"), "1h"), "1d"))
     for node in ("BatchEvalPython", "ArrowEvalPython", "FlatMapGroupsInPandas",
                  "MapInPandas"):

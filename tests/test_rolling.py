@@ -17,7 +17,6 @@ import pandas as pd
 import pytest
 
 from features_engineering_of_motion_data_spark.operators.channels import (
-    dedup_turns,
     derive_channels,
 )
 from features_engineering_of_motion_data_spark.operators.features import (
@@ -73,7 +72,7 @@ def _brute(raw: pd.DataFrame, width: int) -> pd.DataFrame:
 
 
 def test_rolling_merge_matches_raw_brute_force(spark, tiny_path):
-    ch = derive_channels(dedup_turns(read_transcripts(spark, tiny_path)))
+    ch = derive_channels(read_transcripts(spark, tiny_path))
     # bound the brute-force cost: every conv except the 100k-turn edge_hot
     ch = ch.filter(ch.conv_id != "edge_hot").cache()
     got = (
@@ -96,7 +95,7 @@ def test_rolling_merge_matches_raw_brute_force(spark, tiny_path):
 
 
 def test_rolling_merge_width1_is_identity(spark, tiny_path):
-    ch = derive_channels(dedup_turns(read_transcripts(spark, tiny_path)))
+    ch = derive_channels(read_transcripts(spark, tiny_path))
     stats = aggregate_tier(ch, "1h")
     cols = stats.columns
     a = stats.toPandas().sort_values(["conv_id", "channel", "bucket_us"])
@@ -109,7 +108,7 @@ def test_rolling_merge_width1_is_identity(spark, tiny_path):
 
 
 def test_rolling_merge_rejects_bad_width(spark, tiny_path):
-    ch = derive_channels(dedup_turns(read_transcripts(spark, tiny_path)))
+    ch = derive_channels(read_transcripts(spark, tiny_path))
     stats = aggregate_tier(ch, "1h")
     with pytest.raises(ValueError):
         rolling_merge(stats, "1h", 0)

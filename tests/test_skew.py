@@ -8,7 +8,6 @@ import pandas as pd
 import pytest
 
 from features_engineering_of_motion_data_spark.operators.channels import (
-    dedup_turns,
     derive_channels,
 )
 from features_engineering_of_motion_data_spark.operators.features import (
@@ -36,7 +35,7 @@ def _norm(sdf) -> pd.DataFrame:
 
 @pytest.fixture(scope="module")
 def channels(spark, tiny_path):
-    ch = derive_channels(dedup_turns(read_transcripts(spark, tiny_path))).cache()
+    ch = derive_channels(read_transcripts(spark, tiny_path)).cache()
     ch.count()
     return ch
 
@@ -70,8 +69,8 @@ def test_range_layout_preserves_rows(spark, tiny_path):
     df = read_transcripts(spark, tiny_path)
     laid = repartition_by_range(df, 8)
     assert laid.count() == df.count()
-    direct = _norm(aggregate_tier(derive_channels(dedup_turns(df)), "1m"))
+    direct = _norm(aggregate_tier(derive_channels(df), "1m"))
     via_layout = _norm(
-        aggregate_tier(derive_channels(dedup_turns(laid)), "1m")
+        aggregate_tier(derive_channels(laid), "1m")
     )
     pd.testing.assert_frame_equal(via_layout, direct, check_exact=True)

@@ -9,7 +9,6 @@ import pytest
 
 import oracle.features as orc
 from features_engineering_of_motion_data_spark.operators.channels import (
-    dedup_turns,
     derive_channels,
 )
 from features_engineering_of_motion_data_spark.operators.sliding import (
@@ -61,7 +60,7 @@ def _oracle_sliding(channels: pd.DataFrame) -> pd.DataFrame:
 
 @pytest.fixture(scope="module")
 def channel_pdf(spark, tiny_path):
-    ch = derive_channels(dedup_turns(read_transcripts(spark, tiny_path)))
+    ch = derive_channels(read_transcripts(spark, tiny_path))
     # keep the oracle loop fast: drop the 100k-turn hot conv
     return ch.filter("conv_id != 'edge_hot'")
 

@@ -8,7 +8,6 @@ import pandas as pd
 import pytest
 
 from features_engineering_of_motion_data_spark.operators.channels import (
-    dedup_turns,
     derive_channels,
 )
 from features_engineering_of_motion_data_spark.operators.features import (
@@ -29,7 +28,7 @@ from features_engineering_of_motion_data_spark.sources.transcripts import (
 @pytest.fixture(scope="module")
 def feats(spark, tiny_path):
     df = features_from_turns(
-        derive_channels(dedup_turns(read_transcripts(spark, tiny_path))), "1d"
+        derive_channels(read_transcripts(spark, tiny_path)), "1d"
     ).cache()
     df.count()
     return df

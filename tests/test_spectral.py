@@ -15,7 +15,6 @@ import pandas as pd
 import pytest
 
 from features_engineering_of_motion_data_spark.operators.channels import (
-    dedup_turns,
     derive_channels,
 )
 from features_engineering_of_motion_data_spark.operators.spectral import (
@@ -79,7 +78,7 @@ def test_kernel_edge_cases():
 def test_spectral_operator_matches_kernel_and_is_partition_invariant(
     spark, tiny_path
 ):
-    channels = derive_channels(dedup_turns(read_transcripts(spark, tiny_path)))
+    channels = derive_channels(read_transcripts(spark, tiny_path))
     out = spectral_features(channels).toPandas()
     assert len(out) > 0
 

@@ -66,7 +66,7 @@ def test_stream_tier_matches_batch(spark, stream_input):
         .reset_index(drop=True)
     )
     batch = aggregate_tier(
-        derive_channels(dedup_turns(spark.read.parquet(stream_input))), "1m"
+        derive_channels(spark.read.parquet(stream_input)), "1m"
     )
     want = (
         batch.filter(F.col("channel") != "inter_turn_latency")
@@ -106,7 +106,7 @@ def test_streamed_1m_feeds_batch_cascade(spark, stream_input):
     )
     batch_1h = rollup_merge(
         aggregate_tier(
-            derive_channels(dedup_turns(spark.read.parquet(stream_input))), "1m"
+            derive_channels(spark.read.parquet(stream_input)), "1m"
         ),
         "1h",
     )
@@ -327,7 +327,7 @@ def test_stream_dedup_feeds_tier(spark, stream_input, tmp_path):
     got = _run_stream(spark, chained, "dedup_tier").toPandas()
     assert len(got) > 0
     want = (
-        aggregate_tier(derive_channels(dedup_turns(clean)), "1m")
+        aggregate_tier(derive_channels(clean), "1m")
         .filter(F.col("channel") != "inter_turn_latency")
         .select("conv_id", "channel", "bucket_us", "n", "s1", "s2",
                 "min_raw", "max_raw")

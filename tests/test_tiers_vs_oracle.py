@@ -77,7 +77,7 @@ def _assert_tier_equal(spark_pdf: pd.DataFrame, oracle_pdf: pd.DataFrame, tier: 
 @pytest.fixture(scope="module")
 def spark_tiers(spark, tiny_path):
     df = read_transcripts(spark, tiny_path)
-    ch = derive_channels(dedup_turns(df))
+    ch = derive_channels(df)
     return {t: _normalize_spark(sdf) for t, sdf in cascade(ch).items()}
 
 
@@ -110,13 +110,65 @@ def test_dedup_matches_oracle(spark, tiny_path, tiny_pdf):
     assert kept == "edge_dup_turn:keep"
 
 
+def test_dedup_tie_break_matches_oracle(spark):
+    """Duplicates that share (conv_id, turn_idx, ts) fall through to the md5
+    tie-break. The texts are chosen so the md5-first row is neither the
+    shortest nor the lexically first, and the kept row's tool flag differs
+    from the dropped ones; a null text must lose to any text."""
+    import datetime
+
+    from features_engineering_of_motion_data_spark.sources.transcripts import (
+        TRANSCRIPT_SCHEMA,
+    )
+
+    t0 = datetime.datetime(2024, 1, 1, 12, 0, 0, tzinfo=datetime.timezone.utc)
+    sec = datetime.timedelta(seconds=1)
+    rows = [
+        ("tb", 0, "user", "start", None, t0),
+        # md5 order: dddd (11dd…) < bb (21ad…) < ccc (9df6…)
+        ("tb", 1, "user", "ccc", None, t0 + 10 * sec),
+        ("tb", 1, "user", "bb", None, t0 + 10 * sec),
+        ("tb", 1, "user", "dddd", "search", t0 + 10 * sec),
+        # md5 order: yy (2fb1…) < x (9dd4…) < zzz (f3ab…)
+        ("tb", 2, "user", "zzz", "search", t0 + 20 * sec),
+        ("tb", 2, "user", "x", "search", t0 + 20 * sec),
+        ("tb", 2, "user", "yy", None, t0 + 20 * sec),
+        # null text sorts last
+        ("tb", 3, "user", None, None, t0 + 30 * sec),
+        ("tb", 3, "user", "hello", "search", t0 + 30 * sec),
+        # ts decides before the digest: a (0cc1…) is md5-first but later
+        ("tb", 4, "user", "a", None, t0 + 41 * sec),
+        ("tb", 4, "user", "ccc", "search", t0 + 40 * sec),
+        ("tb", 5, "user", "end", None, t0 + 50 * sec),
+    ]
+    turns = spark.createDataFrame(rows, TRANSCRIPT_SCHEMA)
+    pdf = pd.DataFrame(rows, columns=TRANSCRIPT_SCHEMA.fieldNames())
+    pdf["ts"] = pd.to_datetime(pdf["ts"], utc=True).dt.tz_localize(None)
+    want = orc.dedup(pdf)
+    assert list(want["text"]) == ["start", "dddd", "yy", "hello", "ccc", "end"]
+
+    got = dedup_turns(turns).toPandas().sort_values("turn_idx").reset_index(drop=True)
+    for c in ("turn_idx", "text", "tool"):
+        assert list(got[c]) == list(want[c]), c
+
+    cols = ["conv_id", "channel", "turn_idx", "ts_us", "x"]
+    got_ch = (
+        derive_channels(turns).select(*cols).toPandas()
+        .sort_values(cols[:3], kind="mergesort").reset_index(drop=True)
+    )
+    want_ch = orc.derive_channels(want)[cols]
+    assert len(got_ch) == len(want_ch)
+    for c in cols:
+        assert list(got_ch[c]) == list(want_ch[c]), c
+
+
 def test_partitioning_invariance(spark, tiny_path):
     """Same input at 1 vs 16 input partitions → identical tier frames
     (the algebraic half of the N-vs-4N exactness requirement)."""
     base = read_transcripts(spark, tiny_path)
     outs = []
     for nparts in (1, 16):
-        ch = derive_channels(dedup_turns(base.repartition(nparts)))
+        ch = derive_channels(base.repartition(nparts))
         outs.append({t: _normalize_spark(s) for t, s in cascade(ch).items()})
     for tier in ("1m", "1h", "1d"):
         a, b = outs[0][tier], outs[1][tier]
@@ -133,7 +185,6 @@ def test_calendar_month_merge_path_independent_and_correct(spark):
     import pandas as pd
 
     from features_engineering_of_motion_data_spark.operators.channels import (
-        dedup_turns,
         derive_channels,
     )
     from features_engineering_of_motion_data_spark.operators.features import (
@@ -157,7 +208,7 @@ def test_calendar_month_merge_path_independent_and_correct(spark):
             rows.append((conv, i, "user", "y" * int(rng.integers(1, 300)),
                          "search" if i % 3 == 0 else None, t))
     turns = spark.createDataFrame(rows, TRANSCRIPT_SCHEMA)
-    ch = derive_channels(dedup_turns(turns))
+    ch = derive_channels(turns)
     s1m = aggregate_tier(ch, "1m")
 
     def _pdf(df):
