@@ -58,7 +58,9 @@ from features_engineering_of_motion_data_spark.sources.transcripts import (
 )
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+# the cores this process may run on, as perfbench counts them; a larger
+# local[N] only oversubscribes them
+CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", len(os.sched_getaffinity(0))))
 SCALE = os.environ.get("SPARK_GRAFT_BENCH_SCALE", "bench")
 BENCH_DIR = os.path.join(os.path.dirname(os.path.abspath(__file__)), "BENCH")
 

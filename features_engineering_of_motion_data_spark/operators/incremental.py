@@ -45,8 +45,9 @@ so partials of one bucket order cleanly by first_ts_us.
 At 10¹²-turn scale: the delta aggregation costs O(|delta|); the seam read is
 one semi-join of the stats table against the delta's conversations (prunable,
 co-partitioned on hash(conv_id)); the merge touches only those conversations'
-stats; and the rewrite is a dynamic partition overwrite of the affected
-bucket_dates (sinks.write_tier). Nothing scans old raw turns.
+stats; and jobs/rollup.py rewrites each delta-affected conv_id hash range
+whole, overwriting its ``tier=<T>/part=<K>/`` directories (ranges with no
+delta rows are left untouched). Nothing scans old raw turns.
 """
 
 from __future__ import annotations
@@ -184,9 +185,9 @@ def incremental_cascade(
 
     ``old_1m_stats`` must be the finest tier's stats frame (finest(tiers)).
     Coarser tiers are re-derived from the merged finest stats by the standard
-    merge algebra — at deployment scale restricted to the delta's affected
-    conversations/bucket_dates and written via write_tier's dynamic partition
-    overwrite."""
+    merge algebra. jobs/rollup.py restricts this to the delta-affected
+    conv_id hash ranges and overwrites each such range's
+    ``tier=<T>/part=<K>/`` directories whole."""
     if not tiers:
         return {}
     order = sorted(tiers, key=lambda t: TIER_US[t])

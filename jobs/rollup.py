@@ -33,6 +33,12 @@ Two phases, ONE scan of the input per job run (not per range):
    lineage record (snapshot-id, range, rows-in, points-out) to the checkpoint
    manifest only after its writes commit.  Points-out come from an
    ``observe`` on each tier write — the written files are never re-read.
+   Ranges run concurrently on a thread pool bounded by the session's
+   default parallelism, so one range's tasks fill the slots another range
+   leaves idle while its writes plan and commit on the driver; checkpoint
+   records therefore land in completion order, not range order.  A range
+   that fails writes no record, the others still commit theirs, and the
+   job then raises.
 
 ``--resume`` skips completed ranges after verifying the snapshot is
 unchanged.  On success the stage directory is deleted.
@@ -51,10 +57,13 @@ import json
 import os
 import shutil
 import sys
+import threading
 import time
+from concurrent.futures import ThreadPoolExecutor
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+from pyspark import inheritable_thread_target
 from pyspark.sql import functions as F
 
 from features_engineering_of_motion_data_spark.operators.channels import (
@@ -120,7 +129,7 @@ def parse_args(argv=None):
     )
     p.add_argument("--ckpt", default=None, help="manifest path (default <output>/_ckpt.jsonl)")
     p.add_argument("--master", default=None, help="override master (tests); spark-submit sets it otherwise")
-    p.add_argument("--fail-after", type=int, default=None, help="TEST HOOK: abort after N ranges")
+    p.add_argument("--fail-after", type=int, default=None, help="TEST HOOK: run only the first N pending ranges, then exit 42")
     return p.parse_args(argv)
 
 
@@ -195,7 +204,7 @@ def _build_stage_incremental(
     conversations: old stats (read back from the existing ``tier=<finest>``
     output, semi-joined to the delta's conv_ids) + delta stats with seam
     context (operators/incremental.py). Staging the merged frame — rather
-    than the delta alone — keeps the range loop free of a read-then-
+    than the delta alone — keeps the range phase free of a read-then-
     overwrite on the tier dirs it rewrites. ``rows_in`` counts DELTA turns
     per range (the lineage of what this run actually ingested) via an
     explicit count over the small delta — the delta subtree feeds three
@@ -405,14 +414,19 @@ def run(args) -> int:
         T.StructType.fromJson(json.loads(meta["schema"]))
     ).parquet(os.path.join(stage_dir, "stats"))
 
-    ran = 0
-    for part in range(args.num_parts):
-        if part in done:
-            continue
-        if meta.get("incremental") and meta["rows_in"][str(part)] == 0:
-            # no delta turns hashed into this range: its tier outputs on
-            # disk are already bit-correct — skip without rewriting
-            continue
+    pending = [
+        part
+        for part in range(args.num_parts)
+        if part not in done
+        # no delta turns hashed into this range: its tier outputs on disk are
+        # already bit-correct — skip without rewriting
+        and not (meta.get("incremental") and meta["rows_in"][str(part)] == 0)
+    ]
+    if args.fail_after is not None:
+        pending = pending[: args.fail_after]
+    ckpt_lock = threading.Lock()
+
+    def run_range(part: int) -> None:
         t0 = time.perf_counter()
         sub_stats = staged.filter(F.col("part") == part).drop("part")
         points: dict[str, int] = {}
@@ -423,20 +437,35 @@ def run(args) -> int:
             df = df.observe(pobs, F.count(F.lit(1)).alias("points"))
             df.write.mode("overwrite").parquet(dest)
             points[tier] = int(pobs.get["points"])
-        append_record(
-            ckpt,
-            snapshot,
-            part,
-            meta["rows_in"][str(part)],
-            points,
-            time.perf_counter() - t0,
-        )
-        ran += 1
-        if args.fail_after is not None and ran >= args.fail_after:
-            print(f"TEST HOOK: aborting after {ran} ranges", file=sys.stderr)
-            if owns_session:
-                spark.stop()
-            return 42
+        with ckpt_lock:
+            append_record(
+                ckpt,
+                snapshot,
+                part,
+                meta["rows_in"][str(part)],
+                points,
+                time.perf_counter() - t0,
+            )
+
+    if pending:
+        # ranges are independent: overlapping them keeps the task slots busy
+        # while one range's writes plan and commit on the driver. Workers
+        # carry this thread's job group and description into their jobs.
+        # With thread pinning off the call hands back the session, and
+        # there are no JVM thread properties to carry.
+        inherit = inheritable_thread_target(spark)
+        target = inherit(run_range) if callable(inherit) else run_range
+        workers = min(len(pending), spark.sparkContext.defaultParallelism)
+        with ThreadPoolExecutor(workers) as pool:
+            # a failed range writes no record; the others finish first, so
+            # --resume redoes only the failed ones
+            list(pool.map(target, pending))
+    ran = len(pending)
+    if args.fail_after is not None and ran >= args.fail_after:
+        print(f"TEST HOOK: aborting after {ran} ranges", file=sys.stderr)
+        if owns_session:
+            spark.stop()
+        return 42
     shutil.rmtree(stage_dir, ignore_errors=True)
     try:
         os.rmdir(os.path.dirname(stage_dir))  # drop _stage/ itself if empty

@@ -9,6 +9,8 @@ from __future__ import annotations
 
 import json
 import os
+import threading
+import time
 
 import pandas as pd
 import pytest
@@ -58,6 +60,51 @@ def test_resume_after_crash_is_identical(tmp_path_factory, base_args):
     assert len(recs) == 4
     assert {r["part_key"] for r in recs} == {0, 1, 2, 3}
     assert all(r["rows_in"] > 0 for r in recs)
+
+    a, b = _read_tiers(full), _read_tiers(part)
+    for t in TIERS:
+        pd.testing.assert_frame_equal(a[t], b[t], check_exact=True)
+
+
+def test_failed_range_leaves_only_its_own_record(
+    tmp_path_factory, base_args, monkeypatch
+):
+    """Ranges run concurrently: one that fails writes no record, the others
+    still commit theirs, and --resume redoes only the failed range."""
+    import jobs.rollup as rollup_job
+
+    full = str(tmp_path_factory.mktemp("full_iso"))
+    part = str(tmp_path_factory.mktemp("failed_range"))
+    assert _run(base_args + ["--output", full]) == 0
+
+    real = rollup_job.append_record
+    inflight, peak = [0], [0]
+    count_lock = threading.Lock()
+
+    def failing(path, snapshot, part_key, *rest):
+        with count_lock:
+            inflight[0] += 1
+            peak[0] = max(peak[0], inflight[0])
+        try:
+            time.sleep(0.2)  # widen the window an unserialized append would hit
+            if part_key == 1:
+                raise RuntimeError("injected failure in range 1")
+            return real(path, snapshot, part_key, *rest)
+        finally:
+            with count_lock:
+                inflight[0] -= 1
+
+    monkeypatch.setattr(rollup_job, "append_record", failing)
+    with pytest.raises(RuntimeError, match="injected failure in range 1"):
+        _run(base_args + ["--output", part])
+    assert peak[0] == 1  # checkpoint appends never overlap
+    ckpt = os.path.join(part, "_ckpt.jsonl")
+    assert sorted(json.loads(x)["part_key"] for x in open(ckpt)) == [0, 2, 3]
+
+    monkeypatch.setattr(rollup_job, "append_record", real)
+    assert _run(base_args + ["--output", part, "--resume"]) == 0
+    recs = [json.loads(x) for x in open(ckpt)]
+    assert sorted(r["part_key"] for r in recs) == [0, 1, 2, 3]
 
     a, b = _read_tiers(full), _read_tiers(part)
     for t in TIERS:
