@@ -45,9 +45,10 @@ so partials of one bucket order cleanly by first_ts_us.
 At 10¹²-turn scale: the delta aggregation costs O(|delta|); the seam read is
 one semi-join of the stats table against the delta's conversations (prunable,
 co-partitioned on hash(conv_id)); the merge touches only those conversations'
-stats; and jobs/rollup.py rewrites each delta-affected conv_id hash range
-whole, overwriting its ``tier=<T>/part=<K>/`` directories (ranges with no
-delta rows are left untouched). Nothing scans old raw turns.
+stats; and jobs/rollup.py rewrites the delta-affected conv_id hash ranges
+whole, in one dynamic-partition-overwrite write that replaces only their
+``tier=<T>/part=<K>/`` directories (ranges with no delta rows are left
+untouched). Nothing scans old raw turns.
 """
 
 from __future__ import annotations
@@ -186,8 +187,8 @@ def incremental_cascade(
     ``old_1m_stats`` must be the finest tier's stats frame (finest(tiers)).
     Coarser tiers are re-derived from the merged finest stats by the standard
     merge algebra. jobs/rollup.py restricts this to the delta-affected
-    conv_id hash ranges and overwrites each such range's
-    ``tier=<T>/part=<K>/`` directories whole."""
+    conv_id hash ranges and replaces their ``tier=<T>/part=<K>/``
+    directories whole, all of them in one dynamic-overwrite write."""
     if not tiers:
         return {}
     order = sorted(tiers, key=lambda t: TIER_US[t])

@@ -25,20 +25,24 @@ Two phases, ONE scan of the input per job run (not per range):
    action* via ``DataFrame.observe`` (no extra count jobs).  The stage is
    keyed by snapshot-id, so a resumed run whose stage already exists never
    touches the raw input at all.
-2. **Ranges** — each of ``--num-parts`` hash buckets of conv_id is rolled up
-   independently from its *partition-pruned* slice of the staged stats (the
-   stage read's FileScan shows ``PartitionFilters: [part = K]``; asserted in
-   tests/test_plans.py).  A range is conversation-closed and idempotently
-   restartable: it writes ``<output>/tier=<T>/part=<K>/`` and appends a
-   lineage record (snapshot-id, range, rows-in, points-out) to the checkpoint
-   manifest only after its writes commit.  Points-out come from an
-   ``observe`` on each tier write — the written files are never re-read.
-   Ranges run concurrently on a thread pool bounded by the session's
-   default parallelism, so one range's tasks fill the slots another range
-   leaves idle while its writes plan and commit on the driver; checkpoint
-   records therefore land in completion order, not range order.  A range
-   that fails writes no record, the others still commit theirs, and the
-   job then raises.
+2. **Ranges** — the ``--num-parts`` hash buckets of conv_id still pending
+   are rolled up together from their *partition-pruned* slice of the staged
+   stats (the stage read's FileScan shows ``PartitionFilters: [part IN
+   (...)]``; the pruning is asserted in tests/test_plans.py).  Ranges are
+   conversation-closed, so one cascade over the slice gives the rows
+   separate per-range cascades would.  ONE dynamic-partition-overwrite
+   write, partitioned by ``tier`` and ``part``, replaces exactly the
+   ``<output>/tier=<T>/part=<K>/`` directories of the pending ranges; the
+   stage, the checkpoint, ``archive/`` and every other range are left as
+   they are, and an empty range gets no directory.  Only after that write
+   commits does each range append its lineage record (snapshot-id, range,
+   rows-in, points-out, an equal share of the write's wall) to the
+   checkpoint manifest, in range order.  Points-out come from the parquet
+   footers of the files just written — no data is re-read.  Resume is per
+   range: a crash inside the write leaves no records, so ``--resume``
+   rewrites every pending range (the overwrite is idempotent); a failed
+   append leaves only its own range to redo, the other records still land,
+   and the job then raises.
 
 ``--resume`` skips completed ranges after verifying the snapshot is
 unchanged.  On success the stage directory is deleted.
@@ -46,24 +50,25 @@ unchanged.  On success the stage directory is deleted.
 Scale note (10^12 turns): the previous design filtered the FULL input by
 ``pmod(xxhash64(conv_id))`` once per range — O(P·N) read amplification,
 since a hash predicate cannot prune a parquet/Iceberg scan.  The staged
-layout reads the input exactly once and each range reads only its own
-(much smaller, aggregated) bucket via real partition pruning.
+layout reads the input exactly once and the range phase reads only the
+pending (much smaller, aggregated) buckets via real partition pruning.
 """
 
 from __future__ import annotations
 
 import argparse
+import glob
 import json
 import os
 import shutil
 import sys
-import threading
 import time
-from concurrent.futures import ThreadPoolExecutor
+from functools import reduce
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from pyspark import inheritable_thread_target
+import pyarrow.parquet as pq
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from features_engineering_of_motion_data_spark.operators.channels import (
@@ -129,7 +134,13 @@ def parse_args(argv=None):
     )
     p.add_argument("--ckpt", default=None, help="manifest path (default <output>/_ckpt.jsonl)")
     p.add_argument("--master", default=None, help="override master (tests); spark-submit sets it otherwise")
-    p.add_argument("--fail-after", type=int, default=None, help="TEST HOOK: run only the first N pending ranges, then exit 42")
+    p.add_argument(
+        "--fail-after",
+        type=int,
+        default=None,
+        help="TEST HOOK: write the first N pending ranges (in the one tier "
+             "write), record them, then exit 42",
+    )
     return p.parse_args(argv)
 
 
@@ -229,19 +240,59 @@ def _build_stage_incremental(
     # read of exactly the affected part dirs), so convs with no delta in
     # an affected range pass through the merge bit-unchanged
     affected = [k for k in range(args.num_parts) if rows.get(f"p{k}", 0) > 0]
-    old = spark.read.parquet(os.path.join(args.output, f"tier={finest}"))
-    old_stats = old.filter(F.col("part").isin(affected)).select(
-        "conv_id",
-        "channel",
-        F.unix_micros("bucket_start").alias("bucket_us"),
-        *STAT_COLS,
-    )
+    old_dir = os.path.join(args.output, f"tier={finest}")
+    if os.path.isdir(old_dir):
+        old = spark.read.parquet(old_dir)
+        old_stats = old.filter(F.col("part").isin(affected)).select(
+            "conv_id",
+            "channel",
+            F.unix_micros("bucket_start").alias("bucket_us"),
+            *STAT_COLS,
+        )
+    else:
+        # empty ranges write no directory: a prior run over an empty input
+        # left nothing to merge into
+        old_stats = aggregate_tier(derive_channels(delta), finest).limit(0)
     d_stats = delta_tier_stats(old_stats, delta, finest)
     merged = merge_partial_stats(old_stats, d_stats)
     staged = merged.withColumn("part", _part_expr(args.num_parts))
     return _write_stage(
         stage_dir, staged, lambda: rows, args, snapshot, finest, t0,
         extra={"incremental": True, "parent_snapshot": prior["snapshot_id"]},
+    )
+
+
+def _write_tiers(staged, pending: list[int], tiers: tuple[str, ...], args) -> None:
+    """Phase 2: roll every pending range up in ONE write.  Ranges are
+    conversation-closed, so one cascade over their pruned stage slice gives
+    the rows P separate ones would.  Dynamic partition overwrite replaces
+    only the ``tier=<T>/part=<K>`` directories this write produces; the
+    stage, the checkpoint, the archive and every other range stay as they
+    are."""
+    sub_stats = staged.filter(F.col("part").isin(pending)).drop("part")
+    frames = [
+        df.withColumn("tier", F.lit(tier))
+        for tier, df in cascade_from_stats(sub_stats, tiers).items()
+    ]
+    part = F.lpad(_part_expr(args.num_parts).cast("string"), 5, "0")
+    (
+        reduce(DataFrame.unionByName, frames)
+        .withColumn("part", part)
+        .write.mode("overwrite")
+        .option("partitionOverwriteMode", "dynamic")
+        .partitionBy("tier", "part")
+        .parquet(args.output)
+    )
+
+
+def _points_out(output: str, tier: str, part: int) -> int:
+    """Rows one range holds in one tier, from the parquet footers of the
+    files just written (no data read).  A range with no rows has no
+    directory."""
+    d = os.path.join(output, f"tier={tier}", f"part={part:05d}")
+    return sum(
+        pq.ParquetFile(f).metadata.num_rows
+        for f in glob.glob(os.path.join(d, "*.parquet"))
     )
 
 
@@ -391,7 +442,7 @@ def run(args) -> int:
     else:
         done = completed_parts(manifest, snapshot)
 
-    from pyspark.sql import Observation, SparkSession
+    from pyspark.sql import SparkSession
 
     # only stop the session on exit if this job created it (in-process test
     # harnesses share one session via getOrCreate)
@@ -424,42 +475,28 @@ def run(args) -> int:
     ]
     if args.fail_after is not None:
         pending = pending[: args.fail_after]
-    ckpt_lock = threading.Lock()
-
-    def run_range(part: int) -> None:
-        t0 = time.perf_counter()
-        sub_stats = staged.filter(F.col("part") == part).drop("part")
-        points: dict[str, int] = {}
-        outputs = cascade_from_stats(sub_stats, tiers)
-        for tier, df in outputs.items():
-            dest = os.path.join(args.output, f"tier={tier}", f"part={part:05d}")
-            pobs = Observation()
-            df = df.observe(pobs, F.count(F.lit(1)).alias("points"))
-            df.write.mode("overwrite").parquet(dest)
-            points[tier] = int(pobs.get["points"])
-        with ckpt_lock:
-            append_record(
-                ckpt,
-                snapshot,
-                part,
-                meta["rows_in"][str(part)],
-                points,
-                time.perf_counter() - t0,
-            )
-
     if pending:
-        # ranges are independent: overlapping them keeps the task slots busy
-        # while one range's writes plan and commit on the driver. Workers
-        # carry this thread's job group and description into their jobs.
-        # With thread pinning off the call hands back the session, and
-        # there are no JVM thread properties to carry.
-        inherit = inheritable_thread_target(spark)
-        target = inherit(run_range) if callable(inherit) else run_range
-        workers = min(len(pending), spark.sparkContext.defaultParallelism)
-        with ThreadPoolExecutor(workers) as pool:
-            # a failed range writes no record; the others finish first, so
-            # --resume redoes only the failed ones
-            list(pool.map(target, pending))
+        t0 = time.perf_counter()
+        _write_tiers(staged, pending, tiers, args)
+        # one write made every range: each record carries an equal share of
+        # its wall, so the records still sum to the phase wall
+        share = (time.perf_counter() - t0) / len(pending)
+        error = None
+        for part in pending:
+            # a failed append leaves only its own range to redo on --resume
+            try:
+                append_record(
+                    ckpt,
+                    snapshot,
+                    part,
+                    meta["rows_in"][str(part)],
+                    {t: _points_out(args.output, t, part) for t in tiers},
+                    share,
+                )
+            except Exception as e:
+                error = error or e
+        if error is not None:
+            raise error
     ran = len(pending)
     if args.fail_after is not None and ran >= args.fail_after:
         print(f"TEST HOOK: aborting after {ran} ranges", file=sys.stderr)

@@ -117,3 +117,29 @@ def test_non_append_history_is_rejected(
     ).parquet(d)
     with pytest.raises(RuntimeError, match="not an append"):
         _run(["--input", d, "--output", out, "--incremental"] + common)
+
+
+def test_refresh_after_empty_bootstrap(spark, tiny_path, tmp_path):
+    """A full run over an empty input writes no range directories; a
+    refresh that appends turns then merges into nothing and equals a full
+    run over the grown input."""
+    from features_engineering_of_motion_data_spark.sources.transcripts import (
+        TRANSCRIPT_SCHEMA,
+    )
+
+    d = str(tmp_path / "in")
+    # the 100k-turn conversation adds run time and no coverage here
+    turns = read_transcripts(spark, tiny_path).filter(F.col("conv_id") != "edge_hot")
+    spark.createDataFrame([], TRANSCRIPT_SCHEMA).write.parquet(d)
+    common = _common(tiny_path)
+    inc_out, full_out = str(tmp_path / "inc"), str(tmp_path / "full")
+    assert _run(["--input", d, "--output", inc_out, "--incremental"] + common) == 0
+    assert not os.path.exists(os.path.join(inc_out, "tier=1m"))
+
+    turns.repartition(2).write.mode("append").parquet(d)
+    assert _run(["--input", d, "--output", inc_out, "--incremental"] + common) == 0
+    assert _run(["--input", d, "--output", full_out] + common) == 0
+    a, b = _read_tiers(inc_out), _read_tiers(full_out)
+    for t in TIERS:
+        assert len(a[t]) > 0
+        pd.testing.assert_frame_equal(a[t], b[t], check_exact=True)

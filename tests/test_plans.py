@@ -178,6 +178,30 @@ def test_rollup_job_scans_input_once(spark, tiny_path, tmp_path, monkeypatch):
     assert len(calls) == 1
 
 
+@pytest.mark.parametrize("num_parts", [4, 16])
+def test_rollup_job_writes_twice(spark, tiny_path, tmp_path, monkeypatch, num_parts):
+    """A full run makes two parquet writes whatever the range count: the
+    stage, then every range and tier at once."""
+    from pyspark.sql import DataFrameWriter
+
+    import jobs.rollup as rollup_job
+
+    paths = []
+    real = DataFrameWriter.parquet
+
+    def counting(self, path, *a, **kw):
+        paths.append(path)
+        return real(self, path, *a, **kw)
+
+    monkeypatch.setattr(DataFrameWriter, "parquet", counting)
+    out = str(tmp_path / "tiers")
+    args = ["--input", tiny_path, "--output", out, "--tiers", "1m,1h,1d",
+            "--num-parts", str(num_parts), "--master", "local[4]"]
+    assert rollup_job.run(rollup_job.parse_args(args)) == 0
+    assert len(paths) == 2, paths
+    assert paths[1] == out
+
+
 def test_cascade_hot_path_has_no_python(spark, tiny_path):
     """The zero-per-row-Python contract, visible in the plan: the whole
     cascade must contain no Python-evaluation operators (those are confined

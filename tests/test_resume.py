@@ -7,14 +7,22 @@ the tiny fixture with 4 hash ranges.
 
 from __future__ import annotations
 
+import datetime as dt
+import glob
+import hashlib
 import json
 import os
 import threading
 import time
 
 import pandas as pd
+import pyarrow as pa
+import pyarrow.parquet as pq
 import pytest
 
+from features_engineering_of_motion_data_spark.sources.checkpoints import (
+    load_manifest,
+)
 from jobs.rollup import parse_args, run
 
 TIERS = ["1m", "1h"]
@@ -69,8 +77,9 @@ def test_resume_after_crash_is_identical(tmp_path_factory, base_args):
 def test_failed_range_leaves_only_its_own_record(
     tmp_path_factory, base_args, monkeypatch
 ):
-    """Ranges run concurrently: one that fails writes no record, the others
-    still commit theirs, and --resume redoes only the failed range."""
+    """One write makes every range, then records are appended in range
+    order: a failed append writes no record for its range, the others still
+    land, and --resume redoes only the failed range."""
     import jobs.rollup as rollup_job
 
     full = str(tmp_path_factory.mktemp("full_iso"))
@@ -109,6 +118,101 @@ def test_failed_range_leaves_only_its_own_record(
     a, b = _read_tiers(full), _read_tiers(part)
     for t in TIERS:
         pd.testing.assert_frame_equal(a[t], b[t], check_exact=True)
+
+
+def _tier_files(root: str) -> dict[str, list[str]]:
+    """Digests of the parquet files in each ``tier=<T>/part=<K>`` dir (file
+    names carry the write's job id, so only contents are compared)."""
+    out = {}
+    for d in sorted(glob.glob(os.path.join(root, "tier=*", "part=*"))):
+        out[os.path.relpath(d, root)] = sorted(
+            hashlib.sha256(open(f, "rb").read()).hexdigest()
+            for f in glob.glob(os.path.join(d, "*.parquet"))
+        )
+    return out
+
+
+def test_crash_after_commit_reruns_every_range(
+    tmp_path_factory, base_args, monkeypatch
+):
+    """The tier write commits, then every record append fails: the job
+    raises with an empty checkpoint, and --resume rewrites all ranges into
+    tiers byte-identical to an uninterrupted run's."""
+    import jobs.rollup as rollup_job
+
+    full = str(tmp_path_factory.mktemp("full_commit"))
+    part = str(tmp_path_factory.mktemp("crash_after_commit"))
+    assert _run(base_args + ["--output", full]) == 0
+
+    def failing(path, snapshot, part_key, *rest):
+        raise RuntimeError(f"injected failure in range {part_key}")
+
+    monkeypatch.setattr(rollup_job, "append_record", failing)
+    with pytest.raises(RuntimeError, match="injected failure in range 0"):
+        _run(base_args + ["--output", part])
+    ckpt = os.path.join(part, "_ckpt.jsonl")
+    assert load_manifest(ckpt) == []
+
+    monkeypatch.undo()
+    assert _run(base_args + ["--output", part, "--resume"]) == 0
+    assert sorted(r["part_key"] for r in load_manifest(ckpt)) == [0, 1, 2, 3]
+    want = _tier_files(full)
+    assert want and _tier_files(part) == want
+    assert not glob.glob(os.path.join(part, "**", ".spark-staging-*"), recursive=True)
+
+
+def _write_small_input(path: str) -> None:
+    """Three conversations of a few turns each, one with a tool call."""
+    schema = pa.schema([
+        ("conv_id", pa.string()), ("turn_idx", pa.int32()), ("role", pa.string()),
+        ("text", pa.string()), ("tool", pa.string()), ("ts", pa.timestamp("us")),
+    ])
+    t0 = dt.datetime(2024, 3, 1, 23, 58)
+    rows = []
+    for c, (n, step_s) in enumerate([(5, 20), (4, 45), (6, 900)]):
+        for i in range(n):
+            rows.append({
+                "conv_id": f"conv-{c}", "turn_idx": i,
+                "role": "user" if i % 2 == 0 else "assistant",
+                "text": "x" * (3 + 7 * i) if i != 2 else None,
+                "tool": "search" if c == 1 and i == 1 else None,
+                "ts": t0 + dt.timedelta(seconds=c * 7 + i * step_s),
+            })
+    pq.write_table(pa.Table.from_pylist(rows, schema=schema), path)
+
+
+def test_empty_ranges_record_zero_points(tmp_path):
+    """Three conversations over 8 ranges: every range gets a record, an
+    empty range records 0 points and has no directory, each record's points
+    equal the rows on disk, and the tiers equal a one-range run's."""
+    src = str(tmp_path / "three.parquet")
+    _write_small_input(src)
+    common = ["--input", src, "--tiers", ",".join(TIERS), "--master", "local[2]"]
+    out = str(tmp_path / "p8")
+    assert _run(common + ["--output", out, "--num-parts", "8"]) == 0
+
+    recs = load_manifest(os.path.join(out, "_ckpt.jsonl"))
+    assert sorted(r["part_key"] for r in recs) == list(range(8))
+    empty = 0
+    for r in recs:
+        for t in TIERS:
+            d = os.path.join(out, f"tier={t}", f"part={r['part_key']:05d}")
+            on_disk = pq.read_table(d).num_rows if os.path.isdir(d) else 0
+            assert r["points_out"][t] == on_disk
+        if r["rows_in"] == 0:
+            empty += 1
+            assert r["points_out"] == {t: 0 for t in TIERS}
+            assert not glob.glob(os.path.join(out, "tier=*", f"part={r['part_key']:05d}"))
+    assert empty >= 5
+
+    one = str(tmp_path / "p1")
+    assert _run(common + ["--output", one, "--num-parts", "1"]) == 0
+    a, b = _read_tiers(out), _read_tiers(one)
+    for t in TIERS:
+        assert len(a[t]) > 0
+        pd.testing.assert_frame_equal(
+            a[t].drop(columns="part"), b[t].drop(columns="part"), check_exact=True
+        )
 
 
 def test_empty_input_completes(tmp_path):
