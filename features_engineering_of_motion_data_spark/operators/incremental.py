@@ -77,6 +77,12 @@ def seam_phantoms(old_stats: DataFrame, delta_convs: DataFrame) -> DataFrame:
       channel; content is irrelevant by construction);
     * −2 — the second-to-last turn's timestamp (latency lag-2 context);
     * −3 — the last non-null-text turn, when that is not turn n.
+
+    One ``groupBy("conv_id")`` over the semi-joined stats yields all three:
+    each conversation's aggregate row becomes a three-element array of
+    phantom structs, ``inline`` turns it into rows and a keep flag drops the
+    −2/−3 rows whose context is absent. The aggregate is planned and run
+    once, with one scan of ``old_stats``.
     """
     per_conv = (
         old_stats.join(delta_convs.select("conv_id"), "conv_id", "semi")
@@ -100,45 +106,47 @@ def seam_phantoms(old_stats: DataFrame, delta_convs: DataFrame) -> DataFrame:
         )
     )
     ts_n = F.col("tool_last.last_ts_us")
-    p1 = per_conv.select(
-        "conv_id",
-        F.lit(-1).cast("int").alias("turn_idx"),
-        F.lit(None).cast("string").alias("role"),
-        F.when(
-            F.col("text_last.last_ts_us") == ts_n,
-            F.repeat(F.lit("a"), F.col("text_last.last_val").cast("int")),
-        ).alias("text"),
-        F.when(F.col("tool_last.last_val") == 1, F.lit("seam")).alias("tool"),
-        F.timestamp_micros(ts_n).alias("ts"),
+    lat_ts = F.col("lat_last.last_ts_us")
+    text_ts = F.col("text_last.last_ts_us")
+    synth_text = F.repeat(F.lit("a"), F.col("text_last.last_val").cast("int"))
+    no_str = F.lit(None).cast("string")
+
+    def phantom(keep, turn_idx, text, tool, ts_us):
+        return F.struct(
+            keep.alias("_keep"),
+            F.lit(turn_idx).alias("turn_idx"),
+            text.alias("text"),
+            tool.alias("tool"),
+            ts_us.alias("ts_us"),
+        )
+
+    phantoms = F.array(
+        phantom(
+            F.lit(True),
+            -1,
+            F.when(text_ts == ts_n, synth_text),
+            F.when(F.col("tool_last.last_val") == 1, F.lit("seam")),
+            ts_n,
+        ),
+        phantom(
+            lat_ts.isNotNull(), -2, no_str, no_str, ts_n - F.col("lat_last.last_val")
+        ),
+        phantom(
+            text_ts.isNotNull() & (text_ts < ts_n), -3, synth_text, no_str, text_ts
+        ),
     )
-    p2 = (
-        per_conv.filter(F.col("lat_last.last_ts_us").isNotNull())
+    return (
+        per_conv.select("conv_id", F.inline(phantoms))
+        .filter(F.col("_keep"))
         .select(
             "conv_id",
-            F.lit(-2).cast("int").alias("turn_idx"),
-            F.lit(None).cast("string").alias("role"),
-            F.lit(None).cast("string").alias("text"),
-            F.lit(None).cast("string").alias("tool"),
-            F.timestamp_micros(ts_n - F.col("lat_last.last_val")).alias("ts"),
+            "turn_idx",
+            no_str.alias("role"),
+            "text",
+            "tool",
+            F.timestamp_micros(F.col("ts_us")).alias("ts"),
         )
     )
-    p3 = (
-        per_conv.filter(
-            F.col("text_last.last_ts_us").isNotNull()
-            & (F.col("text_last.last_ts_us") < ts_n)
-        )
-        .select(
-            "conv_id",
-            F.lit(-3).cast("int").alias("turn_idx"),
-            F.lit(None).cast("string").alias("role"),
-            F.repeat(F.lit("a"), F.col("text_last.last_val").cast("int")).alias(
-                "text"
-            ),
-            F.lit(None).cast("string").alias("tool"),
-            F.timestamp_micros(F.col("text_last.last_ts_us")).alias("ts"),
-        )
-    )
-    return p1.unionByName(p2).unionByName(p3)
 
 
 def merge_partial_stats(a: DataFrame, b: DataFrame) -> DataFrame:

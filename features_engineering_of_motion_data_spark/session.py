@@ -11,6 +11,20 @@ import os
 
 from pyspark.sql import SparkSession
 
+#: driver heap ceiling, and the default when the host's memory is unknown
+_MAX_DRIVER_MB = 16 * 1024
+
+
+def default_driver_memory(meminfo: str = "/proc/meminfo") -> str:
+    """Half the host's ``MemTotal``, capped at 16g; 16g when the file cannot
+    be read (a non-Linux driver). ``SPARK_GRAFT_DRIVER_MEM`` overrides it."""
+    try:
+        with open(meminfo, encoding="ascii") as f:
+            kb = next(int(l.split()[1]) for l in f if l.startswith("MemTotal:"))
+    except (OSError, StopIteration, ValueError, IndexError):
+        return f"{_MAX_DRIVER_MB}m"
+    return f"{min(kb // 2048, _MAX_DRIVER_MB)}m"
+
 
 def get_spark(
     master: str | None = None,
@@ -59,7 +73,19 @@ def get_spark(
         # bound Arrow batches crossing the JVM<->Python boundary (SURVEY §4)
         "spark.sql.execution.arrow.maxRecordsPerBatch": "65536",
         "spark.ui.enabled": "false",
-        "spark.driver.memory": os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"),
+        "spark.driver.memory": os.environ.get("SPARK_GRAFT_DRIVER_MEM")
+        or default_driver_memory(),
+        # PySpark 4 captures a DataFrame call-site origin on every Column
+        # call: one F.col makes 13 py4j round trips instead of 3, and
+        # building the 1m→1h→1d cascade_from_stats plan makes 2,558 instead
+        # of 838 (warm, ~180 → ~105 ms on a 4-vCPU host). Every job pays
+        # it on the driver, between Spark actions. With capture off, an
+        # analysis error lacks PySpark's DataFrame call-site block: turn it
+        # back on through ``extra_conf`` when debugging (like every key
+        # here, this one wins over a spark-submit ``--conf``).
+        # PySpark caches the flag process-wide on first use, so it only
+        # counts when the session is built.
+        "spark.python.sql.dataFrameDebugging.enabled": "false",
         **extra_default,
     }
     if extra_conf:

@@ -70,11 +70,13 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 import pyarrow.parquet as pq
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from features_engineering_of_motion_data_spark.operators.channels import (
     derive_channels,
 )
 from features_engineering_of_motion_data_spark.operators.features import (
+    STAT_COLS,
     TIER_US,
     aggregate_tier,
 )
@@ -98,6 +100,29 @@ from features_engineering_of_motion_data_spark.sources.transcripts import (
     read_transcripts_delta,
     resolve_snapshot,
     snapshot_manifest,
+)
+
+
+#: the columns of a written tier that an incremental refresh reads back: the
+#: tier key, the sufficient statistics (aggregate_tier's types) and the
+#: range partition column
+_OLD_TIER_SCHEMA = T.StructType(
+    [
+        T.StructField("conv_id", T.StringType()),
+        T.StructField("channel", T.StringType()),
+        T.StructField("bucket_start", T.TimestampType()),
+        T.StructField("n", T.LongType()),
+        T.StructField("s1", T.LongType()),
+        T.StructField("s2", T.DecimalType(38, 0)),
+        T.StructField("min_raw", T.LongType()),
+        T.StructField("max_raw", T.LongType()),
+        T.StructField("zc", T.LongType()),
+        T.StructField("first_ts_us", T.LongType()),
+        T.StructField("last_ts_us", T.LongType()),
+        T.StructField("first_val", T.LongType()),
+        T.StructField("last_val", T.LongType()),
+        T.StructField("part", T.IntegerType()),
+    ]
 )
 
 
@@ -206,29 +231,20 @@ def _build_stage(spark, args, snapshot: str, finest: str, stage_dir: str) -> dic
     )
 
 
-def _build_stage_incremental(
-    spark, args, snapshot: str, finest: str, stage_dir: str, prior: dict
-) -> dict:
-    """Phase 1 (incremental): one pass over the DELTA data files only.
+def _incremental_stage(spark, args, finest: str, prior: dict):
+    """Phase 1 (incremental) frame: ``(staged, rows)``, where ``staged`` is
+    the merged finest-tier stats of the delta-affected ranges with their
+    ``part`` and ``rows`` maps ``p<K>`` to the range's delta-turn count.
 
-    Stages the already-MERGED finest-tier stats for the delta's affected
-    conversations: old stats (read back from the existing ``tier=<finest>``
-    output, semi-joined to the delta's conv_ids) + delta stats with seam
-    context (operators/incremental.py). Staging the merged frame — rather
-    than the delta alone — keeps the range phase free of a read-then-
-    overwrite on the tier dirs it rewrites. ``rows_in`` counts DELTA turns
-    per range (the lineage of what this run actually ingested) via an
-    explicit count over the small delta — the delta subtree feeds three
-    plan branches (channels, seam conv list, semi-join), so an Observation
-    there would be ambiguous. Ranges with zero delta rows are skipped
-    untouched: their tier outputs are already bit-correct on disk.
+    Old stats are read back from the existing ``tier=<finest>`` output with
+    an explicit schema (:data:`_OLD_TIER_SCHEMA`), so no footer-inference
+    job runs before the stage write; without that directory (a prior run
+    over an empty input) they are an empty frame of the same schema. The
+    delta feeds three plan branches: the channel pass (with seam phantoms),
+    the seam conversation list and the seam semi-join; the old stats feed
+    two, the seam aggregate and the merge.
     """
-    from features_engineering_of_motion_data_spark.operators.features import (
-        STAT_COLS,
-    )
-
     delta = read_transcripts_delta(spark, args.input, prior["entries"])
-    t0 = time.perf_counter()
     rows = {
         f"p{r['part']}": r["cnt"]
         for r in delta.groupBy(_part_expr(args.num_parts).alias("part"))
@@ -242,20 +258,41 @@ def _build_stage_incremental(
     affected = [k for k in range(args.num_parts) if rows.get(f"p{k}", 0) > 0]
     old_dir = os.path.join(args.output, f"tier={finest}")
     if os.path.isdir(old_dir):
-        old = spark.read.parquet(old_dir)
-        old_stats = old.filter(F.col("part").isin(affected)).select(
-            "conv_id",
-            "channel",
-            F.unix_micros("bucket_start").alias("bucket_us"),
-            *STAT_COLS,
-        )
+        old = spark.read.schema(_OLD_TIER_SCHEMA).parquet(old_dir)
     else:
         # empty ranges write no directory: a prior run over an empty input
         # left nothing to merge into
-        old_stats = aggregate_tier(derive_channels(delta), finest).limit(0)
+        old = spark.createDataFrame([], _OLD_TIER_SCHEMA)
+    old_stats = old.filter(F.col("part").isin(affected)).select(
+        "conv_id",
+        "channel",
+        F.unix_micros("bucket_start").alias("bucket_us"),
+        *STAT_COLS,
+    )
     d_stats = delta_tier_stats(old_stats, delta, finest)
     merged = merge_partial_stats(old_stats, d_stats)
-    staged = merged.withColumn("part", _part_expr(args.num_parts))
+    return merged.withColumn("part", _part_expr(args.num_parts)), rows
+
+
+def _build_stage_incremental(
+    spark, args, snapshot: str, finest: str, stage_dir: str, prior: dict
+) -> dict:
+    """Phase 1 (incremental): one pass over the DELTA data files only.
+
+    Stages the already-MERGED finest-tier stats for the delta's affected
+    conversations (:func:`_incremental_stage`): old stats read back, with an
+    explicit schema, from the existing ``tier=<finest>`` output, semi-joined
+    to the delta's conv_ids, merged with delta stats that carry seam context
+    (operators/incremental.py). Staging the merged frame — rather than the
+    delta alone — keeps the range phase free of a read-then-overwrite on the
+    tier dirs it rewrites. ``rows_in`` counts DELTA turns per range (the
+    lineage of what this run actually ingested) via an explicit count over
+    the small delta — the delta subtree feeds three plan branches, so an
+    Observation there would be ambiguous. Ranges with zero delta rows are
+    skipped untouched: their tier outputs are already bit-correct on disk.
+    """
+    t0 = time.perf_counter()
+    staged, rows = _incremental_stage(spark, args, finest, prior)
     return _write_stage(
         stage_dir, staged, lambda: rows, args, snapshot, finest, t0,
         extra={"incremental": True, "parent_snapshot": prior["snapshot_id"]},
@@ -458,8 +495,6 @@ def run(args) -> int:
             )
         else:
             meta = _build_stage(spark, args, snapshot, finest, stage_dir)
-
-    from pyspark.sql import types as T
 
     staged = spark.read.schema(
         T.StructType.fromJson(json.loads(meta["schema"]))

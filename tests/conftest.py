@@ -3,6 +3,7 @@ transcript fixtures written once to tests/data/ (gitignored)."""
 
 from __future__ import annotations
 
+import datetime
 import os
 import sys
 
@@ -46,3 +47,34 @@ def sf_dir() -> str:
     # override with SPARK_GRAFT_TEST_SF=sf0.01 to run the driver-mimic
     # contract at the driver's own scale
     return os.path.join(TESTDATA, os.environ.get("SPARK_GRAFT_TEST_SF", "sf0.001"))
+
+
+@pytest.fixture()
+def seam_turns(spark):
+    """Old turns of five hand-built conversations, one incremental-seam case
+    each, from 2024-01-01T00:00:00Z: a single turn, a last turn with text, a
+    null-text last turn, a tool call as last turn, and one ("absent") that
+    the tests leave out of the delta. Turns span several 1m buckets."""
+    from features_engineering_of_motion_data_spark.sources.transcripts import (
+        TRANSCRIPT_SCHEMA,
+    )
+
+    t0 = datetime.datetime(2024, 1, 1, tzinfo=datetime.timezone.utc)
+    rows = [  # (conv_id, turn_idx, role, text, tool, seconds after t0)
+        ("one", 0, "user", "hello", None, 10),
+        ("text_last", 0, "user", "ab", None, 0),
+        ("text_last", 1, "assistant", "abc", None, 70),
+        ("text_last", 2, "user", "abcdefg", None, 150),
+        ("null_last", 0, "user", "ab", None, 0),
+        ("null_last", 1, "assistant", "abcd", None, 65),
+        ("null_last", 2, "user", None, None, 200),
+        ("tool_last", 0, "user", "abc", None, 5),
+        ("tool_last", 1, "assistant", "x", "search", 100),
+        ("absent", 0, "user", "abc", None, 0),
+        ("absent", 1, "assistant", "abcd", "search", 30),
+    ]
+    return spark.createDataFrame(
+        [(c, i, r, t, tool, t0 + datetime.timedelta(seconds=s))
+         for c, i, r, t, tool, s in rows],
+        TRANSCRIPT_SCHEMA,
+    )

@@ -20,6 +20,7 @@ from features_engineering_of_motion_data_spark.operators.features import (
 from features_engineering_of_motion_data_spark.operators.incremental import (
     incremental_cascade,
     merge_partial_stats,
+    seam_phantoms,
 )
 from features_engineering_of_motion_data_spark.operators.rollup import (
     cascade_from_stats,
@@ -109,3 +110,42 @@ def test_merge_partials_is_associative_with_parallelism(spark, split):
     a = _pdf(merge_partial_stats(old_1m.repartition(1), d_1m.repartition(1)))
     b = _pdf(merge_partial_stats(old_1m.repartition(16), d_1m.repartition(16)))
     _assert_bit_equal(a, b, "parallelism")
+
+
+SEAM_T0_US = 1_704_067_200_000_000  # 2024-01-01T00:00:00Z, conftest's seam t0
+
+
+def test_seam_phantoms_cases(spark, seam_turns):
+    """Exact phantom rows (conv_id, turn_idx, length(text), tool, ts µs)
+    for each seam case; a conversation with no delta gets none."""
+    stats = aggregate_tier(derive_channels(seam_turns), "1m")
+    delta_convs = spark.createDataFrame(
+        [("one",), ("text_last",), ("null_last",), ("tool_last",)], "conv_id string"
+    )
+    got = sorted(
+        tuple(r)
+        for r in seam_phantoms(stats, delta_convs)
+        .select(
+            "conv_id",
+            "turn_idx",
+            F.length("text"),
+            "tool",
+            F.unix_micros("ts"),
+        )
+        .collect()
+    )
+    s = 1_000_000
+    assert got == [
+        # null-text last turn: −1 has no text, −3 is the last text turn
+        ("null_last", -3, 4, None, SEAM_T0_US + 65 * s),
+        ("null_last", -2, None, None, SEAM_T0_US + 65 * s),
+        ("null_last", -1, None, None, SEAM_T0_US + 200 * s),
+        # a single old turn: no latency, no earlier text
+        ("one", -1, 5, None, SEAM_T0_US + 10 * s),
+        # last turn carries text: −1 holds its length, no −3
+        ("text_last", -2, None, None, SEAM_T0_US + 70 * s),
+        ("text_last", -1, 7, None, SEAM_T0_US + 150 * s),
+        # a tool call as last turn
+        ("tool_last", -2, None, None, SEAM_T0_US + 5 * s),
+        ("tool_last", -1, 1, "seam", SEAM_T0_US + 100 * s),
+    ]

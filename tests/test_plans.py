@@ -9,6 +9,7 @@ import datetime
 import os
 
 import pytest
+from pyspark.sql import functions as F
 
 from features_engineering_of_motion_data_spark.operators.channels import (
     derive_channels,
@@ -344,3 +345,53 @@ def test_round5_product_query_plans(spark, sf_dir):
     assert plan.count("FlatMapGroupsInPandas") == 1  # encode
     assert plan.count("MapInPandas") == 1            # decode
     assert "BatchEvalPython" not in plan
+
+
+def _scans(df, path_part: str) -> int:
+    """Parquet scans in the executed plan whose root path holds ``path_part``
+    (read from the scan node: the plan string shortens long locations)."""
+    return sum(
+        1 for n in _nodes(df._jdf.queryExecution().executedPlan())
+        if n.nodeName().startswith("Scan parquet")
+        and path_part in n.relation().location().rootPaths().toString()
+    )
+
+
+def test_seam_phantoms_is_one_aggregate(spark, seam_turns, tmp_path):
+    """The ≤3 phantom turns per conversation come out of one per-conversation
+    aggregate: no Union in the plan and a single scan of the stats."""
+    from features_engineering_of_motion_data_spark.operators.incremental import (
+        seam_phantoms,
+    )
+
+    path = str(tmp_path / "stats_1m")
+    aggregate_tier(derive_channels(seam_turns), "1m").write.parquet(path)
+    convs = spark.createDataFrame([("one",), ("null_last",)], "conv_id string")
+    phantoms = seam_phantoms(spark.read.parquet(path), convs)
+    assert "Union" not in _plan(phantoms)
+    assert _scans(phantoms, "stats_1m") == 1
+
+
+def test_incremental_stage_reads_old_tier_twice(spark, seam_turns, tmp_path):
+    """The refresh stage reads ``tier=<finest>`` twice, once for the seam
+    aggregate and once for the merge, typed as the job wrote it."""
+    import jobs.rollup as rollup_job
+
+    d, out = str(tmp_path / "in"), str(tmp_path / "out")
+    seam_turns.write.parquet(d)
+    args = rollup_job.parse_args(
+        ["--input", d, "--output", out, "--tiers", "1m,1h", "--num-parts", "4",
+         "--master", "local[4]", "--incremental"])
+    assert rollup_job.run(args) == 0
+    later = seam_turns.filter("conv_id != 'absent'").select(
+        "conv_id", (F.col("turn_idx") + 10).alias("turn_idx"), "role", "text",
+        "tool", (F.col("ts") + F.expr("INTERVAL 1 HOUR")).alias("ts"))
+    later.write.mode("append").parquet(d)
+    prior = rollup_job._load_input_manifest(out)
+    staged, rows = rollup_job._incremental_stage(spark, args, "1m", prior)
+    assert sum(rows.values()) == later.count()
+    assert _scans(staged, "tier=1m") == 2
+    # the explicit read schema matches what the job wrote
+    written = spark.read.parquet(os.path.join(out, "tier=1m")).schema
+    for f in rollup_job._OLD_TIER_SCHEMA:
+        assert written[f.name].dataType == f.dataType, f.name

@@ -1,0 +1,20 @@
+"""session.get_spark's host-derived defaults."""
+
+from __future__ import annotations
+
+from features_engineering_of_motion_data_spark.session import default_driver_memory
+
+
+def _meminfo(tmp_path, total_kb: int) -> str:
+    p = tmp_path / "meminfo"
+    p.write_text(f"MemTotal:       {total_kb} kB\nMemFree:        1024 kB\n")
+    return str(p)
+
+
+def test_default_driver_memory(tmp_path):
+    """Half of MemTotal in MiB, capped at 16g; 16g when unreadable."""
+    assert default_driver_memory(_meminfo(tmp_path, 16_456_384)) == "8035m"
+    assert default_driver_memory(_meminfo(tmp_path, 64 * 1024 * 1024)) == "16384m"
+    assert default_driver_memory(str(tmp_path / "missing")) == "16384m"
+    (tmp_path / "garbled").write_text("MemFree: 12 kB\n")
+    assert default_driver_memory(str(tmp_path / "garbled")) == "16384m"
