@@ -1,7 +1,7 @@
 #!/bin/bash
-# Round-4 sampler: same pgc32m config and estimator rotation as
-# accumulate_r3g.sh (ParallelGC, 32 MB scan splits, 8 shuffle waves/core,
-# AQE off, 4x corpus), run for a BOUNDED number of cycles so the round's
+# Round-4 sampler: the pgc32m config (ParallelGC, 32 MB scan splits, 8
+# shuffle waves/core, AQE off, 4x corpus) with solo and --simultaneous pairs
+# in rotation, run for a BOUNDED number of cycles so the round's
 # other work isn't starved. Each pass idle-gates on loadavg; min-of-samples
 # means extra samples can only sharpen an arm's quiet-window minimum.
 cd "$(dirname "$0")/.." || exit 1

@@ -8,8 +8,11 @@ runs in a fresh JVM; rounds are interleaved across core counts so host-level
 drift (this VM shows 10×+ minute-scale noise) hits all configs equally, and
 the minimum per config is reported as the contention-free estimate.
 
-Outputs BENCH/scaling.json and rewrites the measured table in
-BENCH/BASELINE.md.
+Merges the new samples into BENCH/<tag>.json and writes nothing else. The
+tag is ``scaling`` (``scaling_pinned`` with --pin), plus ``_p<mult>`` for
+--parts-mult and ``_<conf-tag>`` for --conf-tag: the gate record
+BENCH/scaling_pinned_p8_pgc32m.json comes from --pin --parts-mult 8
+--conf-tag pgc32m (BENCH/accumulate_r5.sh).
 
 Usage:  python BENCH/run_scaling.py [--cores 2,8,32] [--reps 3]
 """

@@ -57,8 +57,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from .channels import derive_channels
-from .features import TIER_US, aggregate_tier, finalize_features
-from .rollup import rollup_merge
+from .features import TIER_US, aggregate_tier
+from .rollup import cascade_from_stats, split_tiers
 
 
 def seam_phantoms(old_stats: DataFrame, delta_convs: DataFrame) -> DataFrame:
@@ -192,19 +192,17 @@ def incremental_cascade(
     """Refresh the cascade for an append: {tier: finalized features frame},
     bit-identical to a full recompute over old∪delta.
 
-    ``old_1m_stats`` must be the finest tier's stats frame (finest(tiers)).
-    Coarser tiers are re-derived from the merged finest stats by the standard
-    merge algebra. jobs/rollup.py restricts this to the delta-affected
-    conv_id hash ranges and replaces their ``tier=<T>/part=<K>/``
-    directories whole, all of them in one dynamic-overwrite write."""
-    if not tiers:
-        return {}
-    order = sorted(tiers, key=lambda t: TIER_US[t])
-    finest = order[0]
+    ``old_1m_stats`` must be the finest fixed tier's stats frame. The delta's
+    stats merge into it, and ``cascade_from_stats`` derives every coarser
+    tier, calendar tiers included. jobs/rollup.py runs the same composition
+    restricted to the delta-affected conv_id hash ranges and replaces their
+    ``tier=<T>/part=<K>/`` directories whole, all of them in one
+    dynamic-overwrite write."""
+    fixed, _ = split_tiers(tiers)
+    if not fixed:  # {} for no tiers, the calendar-only KeyError otherwise
+        return cascade_from_stats(old_1m_stats, tiers)
+    finest = min(fixed, key=lambda t: TIER_US[t])
     merged = merge_partial_stats(
         old_1m_stats, delta_tier_stats(old_1m_stats, delta_turns, finest)
     )
-    stats = {finest: merged}
-    for fine, coarse in zip(order, order[1:]):
-        stats[coarse] = rollup_merge(stats[fine], coarse)
-    return {t: finalize_features(s) for t, s in stats.items()}
+    return cascade_from_stats(merged, tiers)

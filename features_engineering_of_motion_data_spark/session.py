@@ -40,25 +40,15 @@ def get_spark(
     builder = SparkSession.builder.appName(app_name)
     if master:
         builder = builder.master(master)
-    extra_default: dict[str, str] = {}
     if shuffle_partitions is None:
         # 4 task waves per core, not the 200 default (local mode = 1 JVM) and
         # not 1 wave: measured on the staged cascade (BENCH/sweep_gc4.log,
         # sgc4g_p4 vs sgc4g) a 4-wave layout cuts TOTAL CPU ~20% — smaller
         # per-task agg hash maps stay cache/GC-friendly — on top of
         # bin-packing hot-conversation partition skew (max/mean 1.35 at one
-        # wave). The AQE coalesce floor is ONE wave (= core count), not the
-        # full 4-wave layout: pinning it at 4 waves keeps the cascade's
-        # small-hash-map benefit but forbids AQE from shrinking the many
-        # tiny shuffles of the dedup/LSH queries (measured at sf0.1: floor
-        # 4w → 1w cuts q25 9.2→6.9 s, q28 14.9→11.5 s, total bench −8%,
-        # while the cascade moves <0.5 s). The scaling-gate harness pins
-        # its own conf (AQE off) and is unaffected.
+        # wave).
         cpus = int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 8))
         shuffle_partitions = 4 * cpus
-        extra_default["spark.sql.adaptive.coalescePartitions.minPartitionNum"] = str(
-            cpus
-        )
     conf = {
         "spark.sql.shuffle.partitions": str(shuffle_partitions),
         "spark.sql.adaptive.enabled": "true",
@@ -86,7 +76,6 @@ def get_spark(
         # PySpark caches the flag process-wide on first use, so it only
         # counts when the session is built.
         "spark.python.sql.dataFrameDebugging.enabled": "false",
-        **extra_default,
     }
     if extra_conf:
         conf.update(extra_conf)

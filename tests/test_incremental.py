@@ -74,19 +74,22 @@ def _assert_bit_equal(got: pd.DataFrame, want: pd.DataFrame, ctx: str) -> None:
 
 
 def test_incremental_equals_full_recompute(spark, tiny_path, split):
+    """Fixed tiers, and fixed plus a calendar tier merged from the coarsest
+    fixed one."""
     old, delta = split
     old_1m = aggregate_tier(derive_channels(old), "1m").cache()
     old_1m.count()
-
-    inc = incremental_cascade(old_1m, delta, TIERS)
-    full = cascade_from_stats(
-        aggregate_tier(
-            derive_channels(read_transcripts(spark, tiny_path)), "1m"
-        ),
-        TIERS,
+    full_1m = aggregate_tier(
+        derive_channels(read_transcripts(spark, tiny_path)), "1m"
     )
-    for tier in TIERS:
-        _assert_bit_equal(_pdf(inc[tier]), _pdf(full[tier]), tier)
+    for tiers in (TIERS, TIERS + ("month",)):
+        inc = incremental_cascade(old_1m, delta, tiers)
+        full = cascade_from_stats(full_1m, tiers)
+        assert sorted(inc) == sorted(tiers)
+        for tier in tiers:
+            _assert_bit_equal(
+                _pdf(inc[tier]), _pdf(full[tier]), f"{tiers}:{tier}"
+            )
 
 
 def test_empty_delta_is_identity(spark, split):
