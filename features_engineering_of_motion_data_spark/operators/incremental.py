@@ -42,12 +42,15 @@ by the coarser tier's ordinary boundary term when they don't. Appends can
 only deepen a conversation's LAST old bucket or add later ones (ts monotone),
 so partials of one bucket order cleanly by first_ts_us.
 
-At 10¹²-turn scale: the delta aggregation costs O(|delta|); the seam read is
-one semi-join of the stats table against the delta's conversations (prunable,
-co-partitioned on hash(conv_id)); the merge touches only those conversations'
-stats; and jobs/rollup.py rewrites the delta-affected conv_id hash ranges
-whole, in one dynamic-partition-overwrite write that replaces only their
-``tier=<T>/part=<K>/`` directories (ranges with no delta rows are left
+At 10¹²-turn scale: the delta aggregation costs O(|delta|) plus up to three
+phantom rows per conversation of the stats it is given; jobs/rollup.py gives
+it only the delta-affected conv_id hash ranges (a partition-pruned read), so
+the seam aggregate reads the same stats rows the merge does, with no
+semi-join against a conversation list of the delta. Both read those rows
+hash-partitioned on conv_id, the partitioning the delta's channel pass
+already has, so the merge adds no exchange. The job rewrites the affected
+ranges whole, in one dynamic-partition-overwrite write that replaces only
+their ``tier=<T>/part=<K>/`` directories (ranges with no delta rows are left
 untouched). Nothing scans old raw turns.
 """
 
@@ -59,15 +62,58 @@ from pyspark.sql import functions as F
 from .channels import derive_channels
 from .features import TIER_US, aggregate_tier
 from .rollup import cascade_from_stats, split_tiers
+from ..sources.transcripts import TRANSCRIPT_SCHEMA
 
 
-def seam_phantoms(old_stats: DataFrame, delta_convs: DataFrame) -> DataFrame:
+_NO_STR = "CAST(NULL AS STRING)"
+
+
+def _last_of(channel: str, name: str) -> str:
+    """SQL for the (last_ts_us, last_val) of ``channel``'s latest bucket row."""
+    return (
+        "max_by(struct(last_ts_us, last_val),"
+        f" IF(channel = '{channel}', bucket_us, NULL)) AS {name}"
+    )
+
+
+def _phantom(turn_idx: int, text: str, tool: str, ts_us: str) -> str:
+    """SQL for one phantom turn struct in TRANSCRIPT_SCHEMA field order."""
+    return (
+        f"named_struct('turn_idx', {turn_idx}, 'role', {_NO_STR},"
+        f" 'text', {text}, 'tool', {tool}, 'ts', timestamp_micros({ts_us}))"
+    )
+
+
+#: ts_n, the last old turn's ts: the tool channel covers every turn, so its
+#: max-bucket row is turn n
+_TS_N = "tool_last.last_ts_us"
+_SYNTH_TEXT = "repeat('a', CAST(text_last.last_val AS INT))"
+_P1 = _phantom(
+    -1,
+    f"IF(text_last.last_ts_us = {_TS_N}, {_SYNTH_TEXT}, NULL)",
+    "IF(tool_last.last_val = 1, 'seam', NULL)",
+    _TS_N,
+)
+_P2 = _phantom(-2, _NO_STR, _NO_STR, f"{_TS_N} - lat_last.last_val")
+_P3 = _phantom(-3, _SYNTH_TEXT, _NO_STR, "text_last.last_ts_us")
+#: one conversation's phantom turns as rows: −1 always; −2 and −3 are null,
+#: and compacted away, when their context is absent
+_PHANTOMS = (
+    f"inline(array_compact(array({_P1}, "
+    f"IF(lat_last.last_ts_us IS NOT NULL, {_P2}, NULL), "
+    f"IF(text_last.last_ts_us < {_TS_N}, {_P3}, NULL))))"
+)
+
+
+def seam_phantoms(old_stats: DataFrame) -> DataFrame:
     """Synthesize per-conversation phantom turns from finest-tier stats.
 
     ``old_stats``: the existing finest-tier sufficient-statistics frame
     (aggregate_tier output; the persisted tier table works — finalize keeps
-    the stats columns). ``delta_convs``: one-column frame of conv_ids present
-    in the delta (seam state is only materialized for those).
+    the stats columns). Every conversation in it gets its phantoms, so a
+    caller prunes it to the conversations (or hash ranges) the delta
+    touches; phantoms of a conversation with no delta turns yield no channel
+    row once phantom-origin rows are dropped.
 
     Returns rows in TRANSCRIPT_SCHEMA shape: (conv_id, turn_idx, role, text,
     tool, ts) with turn_idx ∈ {−1, −2, −3}:
@@ -78,74 +124,21 @@ def seam_phantoms(old_stats: DataFrame, delta_convs: DataFrame) -> DataFrame:
     * −2 — the second-to-last turn's timestamp (latency lag-2 context);
     * −3 — the last non-null-text turn, when that is not turn n.
 
-    One ``groupBy("conv_id")`` over the semi-joined stats yields all three:
-    each conversation's aggregate row becomes a three-element array of
-    phantom structs, ``inline`` turns it into rows and a keep flag drops the
-    −2/−3 rows whose context is absent. The aggregate is planned and run
-    once, with one scan of ``old_stats``.
+    One ``groupBy("conv_id")`` over the stats yields all three: each
+    conversation's aggregate row becomes an array of phantom structs, null
+    where the −2/−3 context is absent, and ``inline`` over its compacted
+    form turns it into rows. The aggregate is planned and run once, with one
+    scan of ``old_stats``. The expressions are SQL text, so the driver
+    builds the frame in two DataFrame steps and few py4j calls.
     """
-    per_conv = (
-        old_stats.join(delta_convs.select("conv_id"), "conv_id", "semi")
-        .groupBy("conv_id")
-        .agg(
-            # tool channel covers every turn → its max-bucket row is turn n
-            F.max_by(
-                F.struct("last_ts_us", "last_val"),
-                F.when(F.col("channel") == "tool_cadence", F.col("bucket_us")),
-            ).alias("tool_last"),
-            F.max_by(
-                F.struct("last_ts_us", "last_val"),
-                F.when(
-                    F.col("channel") == "inter_turn_latency", F.col("bucket_us")
-                ),
-            ).alias("lat_last"),
-            F.max_by(
-                F.struct("last_ts_us", "last_val"),
-                F.when(F.col("channel") == "text_len", F.col("bucket_us")),
-            ).alias("text_last"),
-        )
-    )
-    ts_n = F.col("tool_last.last_ts_us")
-    lat_ts = F.col("lat_last.last_ts_us")
-    text_ts = F.col("text_last.last_ts_us")
-    synth_text = F.repeat(F.lit("a"), F.col("text_last.last_val").cast("int"))
-    no_str = F.lit(None).cast("string")
-
-    def phantom(keep, turn_idx, text, tool, ts_us):
-        return F.struct(
-            keep.alias("_keep"),
-            F.lit(turn_idx).alias("turn_idx"),
-            text.alias("text"),
-            tool.alias("tool"),
-            ts_us.alias("ts_us"),
-        )
-
-    phantoms = F.array(
-        phantom(
-            F.lit(True),
-            -1,
-            F.when(text_ts == ts_n, synth_text),
-            F.when(F.col("tool_last.last_val") == 1, F.lit("seam")),
-            ts_n,
-        ),
-        phantom(
-            lat_ts.isNotNull(), -2, no_str, no_str, ts_n - F.col("lat_last.last_val")
-        ),
-        phantom(
-            text_ts.isNotNull() & (text_ts < ts_n), -3, synth_text, no_str, text_ts
-        ),
-    )
     return (
-        per_conv.select("conv_id", F.inline(phantoms))
-        .filter(F.col("_keep"))
-        .select(
-            "conv_id",
-            "turn_idx",
-            no_str.alias("role"),
-            "text",
-            "tool",
-            F.timestamp_micros(F.col("ts_us")).alias("ts"),
+        old_stats.groupBy("conv_id")
+        .agg(
+            F.expr(_last_of("tool_cadence", "tool_last")),
+            F.expr(_last_of("inter_turn_latency", "lat_last")),
+            F.expr(_last_of("text_len", "text_last")),
         )
+        .selectExpr("conv_id", _PHANTOMS)
     )
 
 
@@ -175,11 +168,12 @@ def merge_partial_stats(a: DataFrame, b: DataFrame) -> DataFrame:
 
 def delta_tier_stats(old_stats: DataFrame, delta_turns: DataFrame, tier: str) -> DataFrame:
     """Finest-tier sufficient statistics of the delta WITH correct seam
-    context: phantoms provide the window-lag values, then phantom-origin
-    channel rows (turn_idx < 0) are dropped before aggregation."""
-    delta_convs = delta_turns.select("conv_id").distinct()
-    phantoms = seam_phantoms(old_stats, delta_convs)
-    full = phantoms.unionByName(delta_turns.select(*phantoms.columns))
+    context: phantoms of every ``old_stats`` conversation provide the
+    window-lag values, then phantom-origin channel rows (turn_idx < 0) are
+    dropped before aggregation. The delta feeds the plan once, through the
+    channel pass."""
+    turns = delta_turns.select(*TRANSCRIPT_SCHEMA.names)
+    full = seam_phantoms(old_stats).union(turns)
     channels = derive_channels(full).filter(F.col("turn_idx") >= 0)
     return aggregate_tier(channels, tier)
 
@@ -192,7 +186,9 @@ def incremental_cascade(
     """Refresh the cascade for an append: {tier: finalized features frame},
     bit-identical to a full recompute over old∪delta.
 
-    ``old_1m_stats`` must be the finest fixed tier's stats frame. The delta's
+    ``old_1m_stats`` must be the finest fixed tier's stats frame. Every
+    conversation in it gets seam phantoms, so pass only the conversations
+    (or hash ranges) the delta touches when the rest is large. The delta's
     stats merge into it, and ``cascade_from_stats`` derives every coarser
     tier, calendar tiers included. jobs/rollup.py runs the same composition
     restricted to the delta-affected conv_id hash ranges and replaces their

@@ -28,72 +28,16 @@ _MODULES = (archive, detect, events, relational, rolling, shape, signal, text, v
 # correctness sweep at 50 queries while the registry holds 81 — so order IS
 # the attestation rotation.  Policy: least-recently-driver-attested first.
 #
-# Round-5 state: the round-4 artifact (CORRECTNESS_r04.json) green-rowed
-# text/vector/events/relational and q43–q47; it could NOT reach the signal
-# tail (q48–q63), shape (q64–q74), detect (q75–q79) or rolling (q78) —
-# including the q53/q57 round-3-red fixes and the whole q62–q79 canon, which
-# therefore have NO driver attestation at all.  Those 29, plus the two
-# round-5 queries (q80 wide rolling matrix, q81 archive-codec round-trip),
-# go FIRST; positions 32–50 refresh the cheapest round-4 greens
-# (q01–q19); the remaining 31 round-4 greens sit past the window.
-# After a full r5 sweep every registry query has a driver-green row in
-# r4 ∪ r5.  (Window math: 2 new + 29 unattested + 19 refresh = 50.)
+# Round-6 state: the round-5 artifact (CORRECTNESS_r05.json) green-rowed the
+# first 50 queries of the round-5 order: q80/q81, the signal tail, shape,
+# detect, rolling and q01–q19.  The 31 queries whose latest green row is
+# round 4's (CORRECTNESS_r04.json) — q20–q47, q50, q58 and q59 — go FIRST;
+# positions 32–50 re-attest the first 19 of the round-5 order (q80, q81,
+# the signal tail and q64–q67); the other 31 round-5 greens sit past the
+# window.  After a full r6 sweep every registry query has a driver-green
+# row in r5 ∪ r6.  (Window math: 31 round-4-only + 19 refresh = 50.)
 _ORDER = (
-    # -- never driver-attested: new this round ------------------------------
-    "q80_rolling_wide_matrix_24h",
-    "q81_archive_roundtrip_1h",
-    # -- never/stale driver-attested: signal tail (incl. q53/q57 red-fixes) --
-    "q48_cross_channel_corr_1d",
-    "q49_trend_slope_1h",
-    "q51_moments_1d",
-    "q52_value_median_iqr_1h",
-    "q53_waveform_length_1h",
-    "q54_mad_per_conv",
-    "q55_ewma_value",
-    "q56_live_coverage_1h",
-    "q57_lttb_downsample",
-    "q60_percentile_sketch_1h",
-    "q61_interpolated_twa_1h",
-    "q62_hjorth_1d",
-    "q63_ssc_wamp_1h",
-    # -- never driver-attested: shape / detect / rolling (round-4 canon) ----
-    "q64_temporal_moments_1d",
-    "q65_histogram_diversity_1h",
-    "q66_ar2_yule_walker",
-    "q67_amplitude_factors_1h",
-    "q68_burst_runs",
-    "q69_dominant_acf_lag",
-    "q70_paa_sax_1d",
-    "q71_ordinal_patterns_1d",
-    "q72_sample_entropy_1d",
-    "q73_mean_crossing_rate_1h",
-    "q74_sma_1h",
-    "q75_peak_census_1h",
-    "q76_tkeo_dasdv_1d",
-    "q77_cusum_changepoint",
-    "q79_crosscorr_value_gap",
-    "q78_rolling_features_24h",
-    # -- round-4-green refresh block (cheapest queries, positions 32–50) ----
-    "q01_tier_features_1h",
-    "q02_zero_crossings_1d",
-    "q03_inter_event_latency",
-    "q04_turn_rate_1h",
-    "q05_dedup_first",
-    "q06_sessionize",
-    "q07_asof_prior_signup",
-    "q08_json_props",
-    "q09_topk_hot_users",
-    "q10_rollup_event_types",
-    "q11_pricing_summary",
-    "q12_revenue_by_nation",
-    "q13_customers_with_open_orders",
-    "q14_customers_without_open_orders",
-    "q15_theta_join",
-    "q16_union_distinct_users",
-    "q17_error_only_users",
-    "q18_distinct_users",
-    "q19_rolling_features",
-    # -- past the 50-query window: all green in CORRECTNESS_r04 -------------
+    # -- last driver-green in CORRECTNESS_r04, absent from r05 -------------
     "q20_token_stats",
     "q21_exact_dedup",
     "q22_lang_id",
@@ -125,6 +69,58 @@ _ORDER = (
     "q45_spectral_bins_1h",
     "q46_zscore_anomalies",
     "q47_spectral_full",
+    # -- green in CORRECTNESS_r05, re-attested at positions 32–50 ----------
+    "q80_rolling_wide_matrix_24h",
+    "q81_archive_roundtrip_1h",
+    "q48_cross_channel_corr_1d",
+    "q49_trend_slope_1h",
+    "q51_moments_1d",
+    "q52_value_median_iqr_1h",
+    "q53_waveform_length_1h",
+    "q54_mad_per_conv",
+    "q55_ewma_value",
+    "q56_live_coverage_1h",
+    "q57_lttb_downsample",
+    "q60_percentile_sketch_1h",
+    "q61_interpolated_twa_1h",
+    "q62_hjorth_1d",
+    "q63_ssc_wamp_1h",
+    "q64_temporal_moments_1d",
+    "q65_histogram_diversity_1h",
+    "q66_ar2_yule_walker",
+    "q67_amplitude_factors_1h",
+    # -- past the 50-query window: all green in CORRECTNESS_r05 ------------
+    "q68_burst_runs",
+    "q69_dominant_acf_lag",
+    "q70_paa_sax_1d",
+    "q71_ordinal_patterns_1d",
+    "q72_sample_entropy_1d",
+    "q73_mean_crossing_rate_1h",
+    "q74_sma_1h",
+    "q75_peak_census_1h",
+    "q76_tkeo_dasdv_1d",
+    "q77_cusum_changepoint",
+    "q79_crosscorr_value_gap",
+    "q78_rolling_features_24h",
+    "q01_tier_features_1h",
+    "q02_zero_crossings_1d",
+    "q03_inter_event_latency",
+    "q04_turn_rate_1h",
+    "q05_dedup_first",
+    "q06_sessionize",
+    "q07_asof_prior_signup",
+    "q08_json_props",
+    "q09_topk_hot_users",
+    "q10_rollup_event_types",
+    "q11_pricing_summary",
+    "q12_revenue_by_nation",
+    "q13_customers_with_open_orders",
+    "q14_customers_without_open_orders",
+    "q15_theta_join",
+    "q16_union_distinct_users",
+    "q17_error_only_users",
+    "q18_distinct_users",
+    "q19_rolling_features",
 )
 
 

@@ -240,17 +240,15 @@ def _incremental_stage(spark, args, finest: str, prior: dict):
     an explicit schema (:data:`_OLD_TIER_SCHEMA`), so no footer-inference
     job runs before the stage write; without that directory (a prior run
     over an empty input) they are an empty frame of the same schema. The
-    delta feeds three plan branches: the channel pass (with seam phantoms),
-    the seam conversation list and the seam semi-join; the old stats feed
-    two, the seam aggregate and the merge.
+    delta feeds one plan branch, the channel pass with seam phantoms; the
+    old stats feed two, the seam aggregate and the merge. Both old-stats
+    branches are hash-partitioned on ``conv_id`` like the channel pass, so
+    the merge aggregates the union of old and delta stats with no exchange
+    of its own.
     """
     delta = read_transcripts_delta(spark, args.input, prior["entries"])
-    rows = {
-        f"p{r['part']}": r["cnt"]
-        for r in delta.groupBy(_part_expr(args.num_parts).alias("part"))
-        .agg(F.count(F.lit(1)).alias("cnt"))
-        .collect()
-    }
+    part = _part_expr(args.num_parts)
+    rows = {f"p{k}": n for k, n in delta.groupBy(part).count().collect()}
     # a rewritten range must carry ALL its conversations, not only the
     # delta's: the old side is filtered by the partition column (pruned
     # read of exactly the affected part dirs), so convs with no delta in
@@ -263,15 +261,20 @@ def _incremental_stage(spark, args, finest: str, prior: dict):
         # empty ranges write no directory: a prior run over an empty input
         # left nothing to merge into
         old = spark.createDataFrame([], _OLD_TIER_SCHEMA)
-    old_stats = old.filter(F.col("part").isin(affected)).select(
-        "conv_id",
-        "channel",
-        F.unix_micros("bucket_start").alias("bucket_us"),
-        *STAT_COLS,
+    old_stats = (
+        old.filter(F.col("part").isin(affected))
+        .select(
+            "conv_id",
+            "channel",
+            F.unix_micros("bucket_start").alias("bucket_us"),
+            *STAT_COLS,
+        )
+        # the channel pass's exchange is hash(conv_id) too: the merge's
+        # union is then co-partitioned and needs no exchange of its own
+        .repartition("conv_id")
     )
-    d_stats = delta_tier_stats(old_stats, delta, finest)
-    merged = merge_partial_stats(old_stats, d_stats)
-    return merged.withColumn("part", _part_expr(args.num_parts)), rows
+    merged = merge_partial_stats(old_stats, delta_tier_stats(old_stats, delta, finest))
+    return merged.withColumn("part", part), rows
 
 
 def _build_stage_incremental(
@@ -279,17 +282,18 @@ def _build_stage_incremental(
 ) -> dict:
     """Phase 1 (incremental): one pass over the DELTA data files only.
 
-    Stages the already-MERGED finest-tier stats for the delta's affected
-    conversations (:func:`_incremental_stage`): old stats read back, with an
-    explicit schema, from the existing ``tier=<finest>`` output, semi-joined
-    to the delta's conv_ids, merged with delta stats that carry seam context
+    Stages the already-MERGED finest-tier stats of the delta-affected
+    ranges (:func:`_incremental_stage`): old stats read back, with an
+    explicit schema, from those ranges' ``tier=<finest>`` directories,
+    merged with delta stats that carry seam context
     (operators/incremental.py). Staging the merged frame — rather than the
     delta alone — keeps the range phase free of a read-then-overwrite on the
     tier dirs it rewrites. ``rows_in`` counts DELTA turns per range (the
     lineage of what this run actually ingested) via an explicit count over
-    the small delta — the delta subtree feeds three plan branches, so an
-    Observation there would be ambiguous. Ranges with zero delta rows are
-    skipped untouched: their tier outputs are already bit-correct on disk.
+    the small delta, run before the stage is planned because its result
+    picks the ranges whose old stats are read. Ranges with zero delta rows
+    are skipped untouched: their tier outputs are already bit-correct on
+    disk.
     """
     t0 = time.perf_counter()
     staged, rows = _incremental_stage(spark, args, finest, prior)

@@ -7,6 +7,7 @@ Runs at sf0.001 for speed; the driver repeats this at sf0.01.
 
 from __future__ import annotations
 
+import json
 import os
 
 import numpy as np
@@ -123,9 +124,9 @@ def test_entry_smoke(spark):
 def test_registry_rotation_complete():
     """The explicit _ORDER rotation list IS the driver execution order:
     exact set equality with the registry (a query added without a rotation
-    slot fails here, loudly), every query oracle-backed, and the
-    never-driver-attested block (positions 1–31 in round 5) inside the
-    driver's 50-query correctness window."""
+    slot fails here, loudly), every query oracle-backed, and the round-6
+    rotation: the 31 queries with no green row in CORRECTNESS_r05.json come
+    first, inside the driver's 50-query correctness window."""
     from features_engineering_of_motion_data_spark.queries import _ORDER
 
     qs = entrymod.queries()
@@ -137,6 +138,11 @@ def test_registry_rotation_complete():
     assert list(entrymod.oracle_sql()) == list(_ORDER)
     window = set(list(qs)[:50])
     assert set(_ORDER[:31]) <= window
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    with open(os.path.join(root, "CORRECTNESS_r05.json"), encoding="utf-8") as f:
+        r05 = json.load(f)
+    green = {q for q, row in r05.items() if row["hash_match"] and not row["err"]}
+    assert set(_ORDER[:31]) == set(qs) - green
 
 
 def test_q70_sax_nonvacuous_at_driver_scale(spark):

@@ -120,14 +120,13 @@ SEAM_T0_US = 1_704_067_200_000_000  # 2024-01-01T00:00:00Z, conftest's seam t0
 
 def test_seam_phantoms_cases(spark, seam_turns):
     """Exact phantom rows (conv_id, turn_idx, length(text), tool, ts µs)
-    for each seam case; a conversation with no delta gets none."""
+    for each seam case. Every conversation in the stats gets its phantoms,
+    "absent" (which the delta leaves out) included: the caller prunes the
+    stats, and phantoms without delta turns yield no channel row."""
     stats = aggregate_tier(derive_channels(seam_turns), "1m")
-    delta_convs = spark.createDataFrame(
-        [("one",), ("text_last",), ("null_last",), ("tool_last",)], "conv_id string"
-    )
     got = sorted(
         tuple(r)
-        for r in seam_phantoms(stats, delta_convs)
+        for r in seam_phantoms(stats)
         .select(
             "conv_id",
             "turn_idx",
@@ -139,6 +138,9 @@ def test_seam_phantoms_cases(spark, seam_turns):
     )
     s = 1_000_000
     assert got == [
+        # a tool call with text as last turn, two turns in all
+        ("absent", -2, None, None, SEAM_T0_US),
+        ("absent", -1, 4, "seam", SEAM_T0_US + 30 * s),
         # null-text last turn: −1 has no text, −3 is the last text turn
         ("null_last", -3, 4, None, SEAM_T0_US + 65 * s),
         ("null_last", -2, None, None, SEAM_T0_US + 65 * s),

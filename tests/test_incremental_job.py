@@ -143,3 +143,60 @@ def test_refresh_after_empty_bootstrap(spark, tiny_path, tmp_path):
     for t in TIERS:
         assert len(a[t]) > 0
         pd.testing.assert_frame_equal(a[t], b[t], check_exact=True)
+
+
+def test_refresh_stage_exact_under_aqe_coalescing(spark, tiny_path, tmp_path):
+    """The refresh merge aggregates a union of two shuffles (old stats and
+    the delta's channel pass) on the hash(conv_id) partitioning they share,
+    with no exchange of its own. AQE sizes the reads of both shuffles from
+    their partition sizes: on this input 64m and 256k coalesce each side to
+    one partition, 16k and 4k leave all of them. At every size the staged
+    stats equal a from-scratch aggregation of the grown input, row for
+    row."""
+    import jobs.rollup as rollup_job
+    from features_engineering_of_motion_data_spark.operators.channels import (
+        derive_channels,
+    )
+    from features_engineering_of_motion_data_spark.operators.features import (
+        aggregate_tier,
+    )
+
+    d, out = str(tmp_path / "in"), str(tmp_path / "out")
+    turns = read_transcripts(spark, tiny_path).filter(F.col("conv_id") != "edge_hot")
+    w = Window.partitionBy("conv_id")
+    tagged = turns.withColumn(
+        "_d", F.col("turn_idx") > (F.max("turn_idx").over(w) * 0.8).cast("int")
+    )
+    tagged.filter(~F.col("_d")).drop("_d").repartition(2).write.parquet(d)
+    args = parse_args(["--input", d, "--output", out, "--incremental"] + _common(tiny_path))
+    assert run(args) == 0
+    tagged.filter(F.col("_d")).drop("_d").repartition(2).write.mode("append").parquet(d)
+    prior = rollup_job._load_input_manifest(out)
+
+    keys = ["conv_id", "channel", "bucket_us"]
+    part = F.pmod(F.xxhash64("conv_id"), F.lit(4)).cast("int")
+    want = (
+        aggregate_tier(derive_channels(read_transcripts(spark, d)), "1m")
+        .withColumn("part", part).toPandas()
+        .sort_values(keys, kind="mergesort").reset_index(drop=True)
+    )
+    confs = ("spark.sql.adaptive.advisoryPartitionSizeInBytes",
+             "spark.sql.adaptive.coalescePartitions.minPartitionSize")
+    saved = {k: spark.conf.get(k) for k in confs}
+    try:
+        for size in ("64m", "256k", "16k", "4k"):
+            for k in confs:
+                spark.conf.set(k, size)
+            staged, rows = rollup_job._incremental_stage(spark, args, "1m", prior)
+            affected = {int(k[1:]) for k, n in rows.items() if n}
+            got = (
+                staged.withColumn("part", F.col("part").cast("int")).toPandas()
+                .sort_values(keys, kind="mergesort").reset_index(drop=True)
+            )
+            pd.testing.assert_frame_equal(
+                got, want[want["part"].isin(affected)].reset_index(drop=True),
+                check_exact=True, obj=size,
+            )
+    finally:
+        for k, v in saved.items():
+            spark.conf.set(k, v)

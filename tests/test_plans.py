@@ -366,15 +366,15 @@ def test_seam_phantoms_is_one_aggregate(spark, seam_turns, tmp_path):
 
     path = str(tmp_path / "stats_1m")
     aggregate_tier(derive_channels(seam_turns), "1m").write.parquet(path)
-    convs = spark.createDataFrame([("one",), ("null_last",)], "conv_id string")
-    phantoms = seam_phantoms(spark.read.parquet(path), convs)
+    phantoms = seam_phantoms(spark.read.parquet(path))
     assert "Union" not in _plan(phantoms)
     assert _scans(phantoms, "stats_1m") == 1
 
 
-def test_incremental_stage_reads_old_tier_twice(spark, seam_turns, tmp_path):
-    """The refresh stage reads ``tier=<finest>`` twice, once for the seam
-    aggregate and once for the merge, typed as the job wrote it."""
+def _refresh_stage(spark, seam_turns, tmp_path):
+    """Full run over ``seam_turns``, then an append of later turns for every
+    conversation but "absent": returns the append, the input dir, the
+    job's args and the refresh stage's ``(staged, rows)``."""
     import jobs.rollup as rollup_job
 
     d, out = str(tmp_path / "in"), str(tmp_path / "out")
@@ -388,10 +388,48 @@ def test_incremental_stage_reads_old_tier_twice(spark, seam_turns, tmp_path):
         "tool", (F.col("ts") + F.expr("INTERVAL 1 HOUR")).alias("ts"))
     later.write.mode("append").parquet(d)
     prior = rollup_job._load_input_manifest(out)
-    staged, rows = rollup_job._incremental_stage(spark, args, "1m", prior)
+    return later, d, args, rollup_job._incremental_stage(spark, args, "1m", prior)
+
+
+def test_incremental_stage_reads_old_tier_twice(spark, seam_turns, tmp_path):
+    """The refresh stage reads ``tier=<finest>`` twice, once for the seam
+    aggregate and once for the merge, typed as the job wrote it."""
+    import jobs.rollup as rollup_job
+
+    later, _d, args, (staged, rows) = _refresh_stage(spark, seam_turns, tmp_path)
     assert sum(rows.values()) == later.count()
     assert _scans(staged, "tier=1m") == 2
     # the explicit read schema matches what the job wrote
-    written = spark.read.parquet(os.path.join(out, "tier=1m")).schema
+    written = spark.read.parquet(os.path.join(args.output, "tier=1m")).schema
     for f in rollup_job._OLD_TIER_SCHEMA:
         assert written[f.name].dataType == f.dataType, f.name
+
+
+def test_incremental_stage_plans_one_delta_branch(spark, seam_turns, tmp_path):
+    """The refresh stage scans the delta files once, through the channel
+    pass: no aggregate keyed on conv_id alone (a conversation list for a
+    seam semi-join) runs over them. The merge aggregates the union of old
+    and delta stats on the hash(conv_id) partitioning both sides already
+    have, with no Exchange between the merge HashAggregate and the Union."""
+    _later, d, _args, (staged, _rows) = _refresh_stage(spark, seam_turns, tmp_path)
+    delta_dir = os.path.join(d, "")
+    assert _scans(staged, delta_dir) == 1
+
+    def scans_delta(n) -> bool:
+        return (n.nodeName().startswith("Scan parquet")
+                and delta_dir in n.relation().location().rootPaths().toString())
+
+    root = staged._jdf.queryExecution().executedPlan()
+    for n in _nodes(root):
+        if "Aggregate" in n.nodeName() and any(map(scans_delta, _nodes(n))):
+            keys = n.groupingExpressions()
+            assert [keys.apply(i).name() for i in range(keys.size())] != ["conv_id"]
+
+    # single-child chain from the plan root down to the merge's Union
+    path, node = [], next(_nodes(root))
+    while node.nodeName() != "Union":
+        assert node.children().size() == 1, node.nodeName()
+        path.append(node.nodeName())
+        node = node.children().apply(0)
+    assert "HashAggregate" in path
+    assert "Exchange" not in path, path
