@@ -1,31 +1,12 @@
 #!/bin/bash
-# Round-5 sampler: same pgc32m config/estimators as accumulate_r4.sh, plus a
-# FREQUENCY gate in front of each cycle (round-4 verdict item 3): the 1-core
-# arm's quiet-sample count can only grow if a sample lands in a window where
-# the host actually runs near its recorded best, so each cycle first waits
-# (bounded) for the engine-free control to read >= 95% of the quiet best.
-# On gate timeout the cycle still runs — throttled samples can't hurt the
-# min-of-samples estimator, and the contended_1core flag (run_scaling.py)
-# excludes foreground-polluted 1-core samples from every reported number.
+# Round-5 sampler: same pgc32m config/estimators as accumulate_r4.sh. The
+# contended_1core flag (run_scaling.py) excludes foreground-polluted 1-core
+# samples from every reported number, and --wait-idle holds each run until
+# the load average settles.
 cd "$(dirname "$0")/.." || exit 1
 IN=tests/data/transcripts_bench4x.parquet
 CONF='{"spark.sql.adaptive.enabled": "false", "spark.driver.extraJavaOptions": "-XX:+UseParallelGC", "spark.driver.memory": "4g", "spark.sql.files.maxPartitionBytes": "32m"}'
 for i in $(seq 1 "${1:-10}"); do
-  python - <<'PY'
-import json, os, sys, time
-sys.path.insert(0, "BENCH")
-from freq_control import measure
-best = json.load(open("BENCH/freq_control.json"))["best_ops_per_core"]["1"]
-t0 = time.time()
-while time.time() - t0 < 900:
-    if os.getloadavg()[0] < 2.0:
-        r = measure(1, 3.0)
-        print(f"freq gate: {r:,.0f} ops/s ({r / best:.3f} of best)", flush=True)
-        if r >= 0.95 * best:
-            sys.exit(0)
-    time.sleep(20)
-print("freq gate: timeout, sampling anyway", flush=True)
-PY
   SPARK_GRAFT_EXTRA_CONF="$CONF" python BENCH/run_scaling.py --pin --reps 1 --cores 1,4 --parts-mult 8 --conf-tag pgc32m --wait-idle 5 --input "$IN"
   SPARK_GRAFT_EXTRA_CONF="$CONF" python BENCH/run_scaling.py --pin --simultaneous --reps 1 --cores 1,4 --parts-mult 8 --conf-tag pgc32m --wait-idle 5 --input "$IN"
 done

@@ -641,9 +641,9 @@ def lsh_candidate_pairs(
     """(vec_a, vec_b) candidate pairs sharing ≥1 (band, key) bucket, each
     bucket capped at its ``bucket_cap`` smallest vec_ids (see LSH_BUCKET_CAP).
 
-    Exposed separately so bench.py can measure banding *selectivity*
-    (candidates ≪ n²/2) at a production parameterization directly, instead
-    of arguing it from the collision-probability math in q34's docstring."""
+    Exposed separately so banding *selectivity* (candidates ≪ n²/2) can be
+    measured at a production parameterization directly, instead of argued
+    from the collision-probability math in q34's docstring."""
     sig = e.select(
         "vec_id", F.explode(_band_keys(F.col("q"), bands, band_bits)).alias("bk")
     ).select("vec_id", F.col("bk.band").alias("band"), F.col("bk.bkey").alias("bkey"))
@@ -702,8 +702,9 @@ def q34_embedding_lsh_pairs(
     16×4 banding passes <7 % of random pairs at >99.97 % recall. The
     fixture (max pair cosine ≈ 0.5) exercises the candidate→verify
     CORRECTNESS contract; ``threshold``/``bands``/``band_bits`` are the
-    deployment tuning surface — bench.py measures the production regime
-    (threshold=0.8, 8 bands × 8 bits) directly."""
+    deployment tuning surface; at the production regime (threshold=0.8,
+    8 bands × 8 bits) ``lsh_candidate_pairs`` measured 73,207 candidates of
+    1,999,000 pairs at sf0.1 (COVERAGE.md, round-3 item 2)."""
     e = _quantized(_emb(spark, sf_dir)).select(
         "vec_id", "q", _dot(F.col("q"), F.col("q")).alias("nq")
     )
@@ -809,7 +810,7 @@ def q37_embedding_lsh_pairs_tuned(spark: SparkSession, sf_dir: str) -> DataFrame
     """q34 at the production-style tuning (threshold 0.45, 8 bands x 8 bits):
     exercises the banding parameter surface end-to-end against a regenerated
     SQL oracle — candidates are ~20x more selective than the fixture default
-    (measured in bench.py lsh_candidates) and the exact-verify step makes the
+    (measured with ``lsh_candidate_pairs``) and the exact-verify step makes the
     output deterministic regardless of banding recall."""
     return q34_embedding_lsh_pairs(
         spark,

@@ -32,11 +32,16 @@ def get_spark(
     shuffle_partitions: int | None = None,
     extra_conf: dict | None = None,
 ) -> SparkSession:
-    """Build (or fetch) the canonical SparkSession.
+    """Build the canonical SparkSession, or return the active one untouched.
 
     ``master=None`` defers to spark-submit / an existing session, so the same
-    entry points run under a real cluster manager unchanged.
+    entry points run under a real cluster manager unchanged. A job called
+    in-process (tests, perfbench) runs on its caller's session as configured:
+    re-applying the defaults below would override the caller's settings.
     """
+    active = SparkSession.getActiveSession()
+    if active is not None:
+        return active
     builder = SparkSession.builder.appName(app_name)
     if master:
         builder = builder.master(master)

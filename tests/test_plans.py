@@ -123,7 +123,7 @@ def test_small_dims_broadcast(spark, sf_dir):
 
 
 def test_rollup_merge_reuses_cached_stats(spark, tiny_path):
-    """bench.py times each tier merge against the persisted 1m frame; the
+    """BENCH/child_cascade.py merges 1h from its persisted 1m frame; the
     merge plan must actually read the cache (InMemoryTableScan), not
     recompute the base aggregation from the parquet scan."""
     ch = derive_channels(read_transcripts(spark, tiny_path))

@@ -1,12 +1,12 @@
 """Every package module is reached by a product path.
 
 The product entry points are the driver registry (``__spark_entry__.py``),
-the spark-submit jobs (``jobs/*.py``) and the benchmark harness
-(``bench.py``). Their imports, absolute and relative, are followed through
-the package with ``ast`` (importing a module also runs its parent packages'
-``__init__``), and every module under the package must be reached. A module
-no product path imports is dead weight: delete it instead of keeping it
-alive with its own tests.
+the spark-submit jobs (``jobs/*.py``) and the benchmark (``bench.py`` and
+``perfbench/*.py``, which drives the jobs). Their imports, absolute and
+relative, are followed through the package with ``ast`` (importing a module
+also runs its parent packages' ``__init__``), and every module under the
+package must be reached. A module no product path imports is dead weight:
+delete it instead of keeping it alive with its own tests.
 """
 
 from __future__ import annotations
@@ -24,11 +24,6 @@ EXEMPT = {
         "is wired into the rollup job or folded into aggregate_tier waits on "
         "the exchange.skew measurement (ROADMAP item 6)"
     ),
-    f"{PKG}.streaming": (
-        "SURVEY §2.10 streaming stretch, no job runs it; its deletion with "
-        "its nine tests is a change of its own (ROADMAP item 6)"
-    ),
-    f"{PKG}.streaming.rollup_stream": "see streaming",
 }
 
 
@@ -79,6 +74,7 @@ def test_every_package_module_is_reached():
         ROOT / "__spark_entry__.py",
         ROOT / "bench.py",
         *sorted((ROOT / "jobs").glob("*.py")),
+        *sorted((ROOT / "perfbench").glob("*.py")),
     ]
     mods = _package_modules()
     reached = _reached(mods, entries)

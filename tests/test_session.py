@@ -1,8 +1,11 @@
-"""session.get_spark's host-derived defaults."""
+"""session.get_spark's host-derived defaults and its reuse of a running session."""
 
 from __future__ import annotations
 
-from features_engineering_of_motion_data_spark.session import default_driver_memory
+from features_engineering_of_motion_data_spark.session import (
+    default_driver_memory,
+    get_spark,
+)
 
 
 def _meminfo(tmp_path, total_kb: int) -> str:
@@ -18,3 +21,10 @@ def test_default_driver_memory(tmp_path):
     assert default_driver_memory(str(tmp_path / "missing")) == "16384m"
     (tmp_path / "garbled").write_text("MemFree: 12 kB\n")
     assert default_driver_memory(str(tmp_path / "garbled")) == "16384m"
+
+
+def test_get_spark_leaves_active_session_untouched(spark):
+    """A job calling get_spark() in-process runs on its caller's session as
+    configured; the defaults are not re-applied over the caller's settings."""
+    assert spark.conf.get("spark.sql.shuffle.partitions") == "4"
+    assert get_spark().conf.get("spark.sql.shuffle.partitions") == "4"
