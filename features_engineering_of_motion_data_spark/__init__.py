@@ -21,39 +21,3 @@ Core contract (SURVEY.md §2.4–§2.6, amended by DESIGN.md):
 """
 
 __version__ = "0.1.0"
-
-TIERS = ("1m", "1h", "1d")
-
-# channel name -> (unit divisor u, description)
-CHANNELS = {
-    "text_len": (1.0, "characters of turn text"),
-    "inter_turn_latency": (1e6, "microseconds between consecutive turns"),
-    "tool_cadence": (1.0, "1 if the turn is a tool call else 0"),
-}
-
-from .operators.channels import dedup_turns, derive_channels  # noqa: E402,F401
-from .operators.features import (  # noqa: E402,F401
-    aggregate_tier,
-    features_from_turns,
-    finalize_features,
-)
-from .operators.rollup import cascade, rollup_merge, rollup_merge_calendar  # noqa: E402,F401
-from .sources.sinks import (  # noqa: E402,F401
-    apply_retention,
-    compact,
-    expire,
-    list_snapshots,
-    read_tier,
-    register_tier_views,
-    write_tier,
-)
-from .sources.transcripts import read_transcripts, resolve_snapshot  # noqa: E402,F401
-from .operators.archive import build_archive, decode_archive  # noqa: E402,F401
-from .operators.gapfill import gapfill_features, gapfill_series  # noqa: E402,F401
-from .operators.incremental import (  # noqa: E402,F401
-    incremental_cascade,
-    merge_partial_stats,
-)
-from .operators.metrics import tier_metrics  # noqa: E402,F401
-from .operators.sliding import sliding_features  # noqa: E402,F401
-from .operators.spectral import spectral_features  # noqa: E402,F401

@@ -42,36 +42,20 @@ STAT_COLS = [
     "last_val",
 ]
 
-KEY_COLS = ["conv_id", "channel", "bucket_us"]
-
-
-def bucket_us(col: Column, tier: str) -> Column:
-    """Epoch-aligned bucket floor in µs (DESIGN.md §5).
-
-    Pure integer arithmetic — ``ts − pmod(ts, step)`` — because float division
-    of µs-scale int64 loses ulps near bucket edges.
-    """
-    step = F.lit(TIER_US[tier])
-    return (col - F.pmod(col, step)).alias("bucket_us")
-
 
 def _sign(col: Column) -> Column:
     """sign(x) = −1 if x < 0 else +1; sign(0) = +1 (DESIGN.md §3)."""
     return F.when(col < 0, F.lit(-1)).otherwise(F.lit(1))
 
 
-def aggregate_tier(channels: DataFrame, tier: str) -> DataFrame:
-    """Base-tier sufficient statistics per (conv_id, channel, bucket).
+def bucket_and_cross(tier: str) -> tuple[Column, Column]:
+    """A channel row's bucket floor in µs and its zero-crossing indicator.
 
-    Input is :func:`..operators.channels.derive_channels` output — the long
-    channel frame already carries ``prev_x``/``prev_ts_us`` from the same
-    window pass, so the zero-crossing indicator (a crossing belongs to bucket
-    b iff *both* turns of the consecutive pair truncate to b; DESIGN.md §3)
-    is a row-local expression and this whole operator is one hash aggregation
-    that reuses the existing hash(conv_id) partitioning — no extra shuffle.
-
-    s2 = Σx² is decimal(38,0): latency-µs squared exceeds int64; decimal sums
-    are exact integers, keeping every merge bit-exact.
+    The floor is epoch-aligned pure integer arithmetic — ``ts − pmod(ts,
+    step)`` — because float division of µs-scale int64 loses ulps near
+    bucket edges (DESIGN.md §5). A crossing belongs to bucket b iff *both*
+    turns of the consecutive pair truncate to b (DESIGN.md §3); the channel
+    frame carries ``prev_x``/``prev_ts_us`` for it.
     """
     step = F.lit(TIER_US[tier])
     b = F.col("ts_us") - F.pmod(F.col("ts_us"), step)
@@ -81,7 +65,22 @@ def aggregate_tier(channels: DataFrame, tier: str) -> DataFrame:
         & (prev_b == b)
         & (_sign(F.col("prev_x")) * _sign(F.col("x")) < 0)
     ).cast("long")
+    return b, cross
 
+
+def aggregate_tier(channels: DataFrame, tier: str) -> DataFrame:
+    """Base-tier sufficient statistics per (conv_id, channel, bucket).
+
+    Input is :func:`..operators.channels.derive_channels` output — the long
+    channel frame already carries ``prev_x``/``prev_ts_us`` from the same
+    window pass, so the zero-crossing indicator (:func:`bucket_and_cross`)
+    is a row-local expression and this whole operator is one hash aggregation
+    that reuses the existing hash(conv_id) partitioning — no extra shuffle.
+
+    s2 = Σx² is decimal(38,0): latency-µs squared exceeds int64; decimal sums
+    are exact integers, keeping every merge bit-exact.
+    """
+    b, cross = bucket_and_cross(tier)
     x_dec = F.col("x").cast("decimal(19,0)")
     return (
         channels.withColumn("bucket_us", b)
@@ -109,30 +108,45 @@ def unit_divisor(channel: Column) -> Column:
     )
 
 
-def finalize_features(stats: DataFrame) -> DataFrame:
+def pinned_features(
+    n: Column, s1: Column, s2: Column, mn: Column, mx: Column, zc: Column, u: Column
+) -> dict[str, Column]:
     """Pinned float64 finalization (DESIGN.md §2) — verbatim evaluation order.
 
-    Every arithmetic step below is a single IEEE-754 double operation mirrored
-    exactly in oracle/features.py::_finalize; int→double and decimal→double
-    casts are correctly rounded on both the JVM and CPython.
+    Takes the exact-integer statistics of one series (count, Σx, Σx², min,
+    max, zero crossings) and its unit divisor ``u``; returns the features
+    ``f_mean`` … ``f_energy`` by name, in emission order. Every arithmetic
+    step is a single IEEE-754 double operation mirrored exactly in
+    oracle/features.py::_finalize; int→double and decimal→double casts are
+    correctly rounded on both the JVM and CPython.
     """
-    fn = F.col("n").cast("double")
-    m = F.col("s1").cast("double") / fn
-    q = F.col("s2").cast("double") / fn
+    fn = n.cast("double")
+    m = s1.cast("double") / fn
+    q = s2.cast("double") / fn
     var = q - m * m
     var = F.when(var < 0, F.lit(0.0)).otherwise(var)
-    u = unit_divisor(F.col("channel"))
+    return {
+        "f_mean": m / u,
+        "f_std": F.sqrt(var) / u,
+        "f_rms": F.sqrt(q) / u,
+        "f_min": mn.cast("double") / u,
+        "f_max": mx.cast("double") / u,
+        "f_zero_crossings": zc,
+        "f_energy": s2.cast("double") / (u * u),
+    }
+
+
+def finalize_features(stats: DataFrame) -> DataFrame:
+    """A tier's feature table: key, :func:`pinned_features` and the stats."""
+    feats = pinned_features(
+        *(F.col(c) for c in ("n", "s1", "s2", "min_raw", "max_raw", "zc")),
+        unit_divisor(F.col("channel")),
+    )
     return stats.select(
         "conv_id",
         "channel",
         F.timestamp_micros(F.col("bucket_us")).alias("bucket_start"),
-        (m / u).alias("f_mean"),
-        (F.sqrt(var) / u).alias("f_std"),
-        (F.sqrt(q) / u).alias("f_rms"),
-        (F.col("min_raw").cast("double") / u).alias("f_min"),
-        (F.col("max_raw").cast("double") / u).alias("f_max"),
-        F.col("zc").alias("f_zero_crossings"),
-        (F.col("s2").cast("double") / (u * u)).alias("f_energy"),
+        *(c.alias(k) for k, c in feats.items()),
         *STAT_COLS,
     )
 

@@ -22,9 +22,9 @@ the engine's own product surface.
 
 Exactness: per-channel sufficient statistics are the same exact integers
 :func:`~.features.aggregate_tier` computes (s2 as decimal(38,0)), and the
-per-channel finalization applies :func:`~.features.finalize_features`'s
-pinned float64 op order verbatim with the channel's unit divisor folded
-to a literal — so every matrix cell is bit-identical to the long-form
+per-channel finalization is :func:`~.features.pinned_features`, the
+tier path's pinned float64 op order, with the channel's unit divisor
+folded to a literal — so every matrix cell is bit-identical to the long-form
 tier value it transposes (gated bitwise in tests/test_features_job.py).
 """
 
@@ -33,7 +33,12 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from .features import TIER_US, _sign, aggregate_tier, finalize_features
+from .features import (
+    aggregate_tier,
+    bucket_and_cross,
+    finalize_features,
+    pinned_features,
+)
 
 #: channels produced by operators/channels.derive_channels, with their
 #: raw-unit divisors (DESIGN.md §1: latency is stored in µs, reported in s)
@@ -83,24 +88,14 @@ def _channel_aggs(ch: str, cross: Column) -> list[Column]:
 
 
 def _channel_features(ch: str, u: float) -> list[Column]:
-    """Pinned finalization for one channel — finalize_features's op order
-    verbatim, with the unit divisor a folded literal."""
+    """Pinned finalization for one channel, the unit divisor a literal."""
     c = lambda s: F.col(f"_{ch}__{s}")  # noqa: E731
-    fn = c("n").cast("double")
-    m = c("s1").cast("double") / fn
-    q = c("s2").cast("double") / fn
-    var = q - m * m
-    var = F.when(var < 0, F.lit(0.0)).otherwise(var)
-    ud = F.lit(u)
+    feats = pinned_features(
+        *(c(s) for s in ("n", "s1", "s2", "min", "max", "zc")), F.lit(u)
+    )
     return [
         c("n").alias(f"{ch}__n"),
-        (m / ud).alias(f"{ch}__f_mean"),
-        (F.sqrt(var) / ud).alias(f"{ch}__f_std"),
-        (F.sqrt(q) / ud).alias(f"{ch}__f_rms"),
-        (c("min").cast("double") / ud).alias(f"{ch}__f_min"),
-        (c("max").cast("double") / ud).alias(f"{ch}__f_max"),
-        c("zc").alias(f"{ch}__f_zero_crossings"),
-        (c("s2").cast("double") / (ud * ud)).alias(f"{ch}__f_energy"),
+        *(col.alias(f"{ch}__{f}") for f, col in feats.items()),
     ]
 
 
@@ -114,15 +109,7 @@ def wide_tier_matrix(
     fixed-width tier key from :data:`~.features.TIER_US`.
     """
     chans = CHANNELS if channels is None else channels
-    step = F.lit(TIER_US[tier])
-    b = F.col("ts_us") - F.pmod(F.col("ts_us"), step)
-    prev_b = F.col("prev_ts_us") - F.pmod(F.col("prev_ts_us"), step)
-    cross = (
-        F.col("prev_ts_us").isNotNull()
-        & (prev_b == b)
-        & (_sign(F.col("prev_x")) * _sign(F.col("x")) < 0)
-    ).cast("long")
-
+    b, cross = bucket_and_cross(tier)
     aggs: list[Column] = []
     for ch in chans:
         aggs.extend(_channel_aggs(ch, cross))

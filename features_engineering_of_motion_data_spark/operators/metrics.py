@@ -4,8 +4,8 @@ What an operator of this engine monitors per tier partition: row/point
 volumes, exact and approximate distinct conversations, bucket coverage.
 Computed straight from a tier's sufficient-statistics frame (one extra
 hash aggregation over already-aggregated data — never from raw turns), at
-``bucket_date`` granularity so each metrics row describes one retention/
-resume partition of the tier table (sources/sinks.py layout).
+``bucket_date`` granularity so each metrics row describes one day of the
+tier.
 
 The approx column uses Spark's native HyperLogLog++ (`approx_count_distinct`,
 rsd 5%): at 10¹² turns the exact distinct needs a conv_id shuffle anyway —

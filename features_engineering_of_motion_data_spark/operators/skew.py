@@ -25,26 +25,19 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.functions import broadcast
 
-from .features import TIER_US, _sign
+from .features import bucket_and_cross
 
 
 def repartition_by_range(df: DataFrame, num_partitions: int) -> DataFrame:
     """K1: deterministic global layout on (conv_id, ts) + intra-partition
-    order (conv_id, turn_idx) — file clustering for tier sinks and scans."""
+    order (conv_id, turn_idx) — file clustering for scans."""
     return df.repartitionByRange(num_partitions, "conv_id", "ts").sortWithinPartitions(
         "conv_id", "turn_idx"
     )
 
 
 def _phase1(channels: DataFrame, tier: str, salt_col) -> DataFrame:
-    step = F.lit(TIER_US[tier])
-    b = F.col("ts_us") - F.pmod(F.col("ts_us"), step)
-    prev_b = F.col("prev_ts_us") - F.pmod(F.col("prev_ts_us"), step)
-    cross = (
-        F.col("prev_ts_us").isNotNull()
-        & (prev_b == b)
-        & (_sign(F.col("prev_x")) * _sign(F.col("x")) < 0)
-    ).cast("long")
+    b, cross = bucket_and_cross(tier)
     x_dec = F.col("x").cast("decimal(19,0)")
     return (
         channels.withColumn("bucket_us", b)

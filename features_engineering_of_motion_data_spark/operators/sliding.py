@@ -18,7 +18,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from .features import _sign, unit_divisor
+from .features import _sign, pinned_features, unit_divisor
 
 
 def sliding_features(channels: DataFrame, window: int = 8) -> DataFrame:
@@ -66,23 +66,15 @@ def sliding_features(channels: DataFrame, window: int = 8) -> DataFrame:
         )
         .filter((F.col("n_w") == window) & (F.pmod(F.col("_rn"), F.lit(hop)) == 0))
     )
-    fn = F.col("n_w").cast("double")
-    m = F.col("s1_w").cast("double") / fn
-    q = F.col("s2_w").cast("double") / fn
-    var = q - m * m
-    var = F.when(var < 0, F.lit(0.0)).otherwise(var)
-    u = unit_divisor(F.col("channel"))
+    feats = pinned_features(
+        *(F.col(c) for c in ("n_w", "s1_w", "s2_w", "min_w", "max_w", "zc_w")),
+        unit_divisor(F.col("channel")),
+    )
     return d.select(
         "conv_id",
         "channel",
         F.col("turn_idx").alias("window_end_turn"),
         F.col("ts_us").alias("window_end_ts_us"),
         F.col("n_w").alias("n"),
-        (m / u).alias("f_mean"),
-        (F.sqrt(var) / u).alias("f_std"),
-        (F.sqrt(q) / u).alias("f_rms"),
-        (F.col("min_w").cast("double") / u).alias("f_min"),
-        (F.col("max_w").cast("double") / u).alias("f_max"),
-        F.col("zc_w").alias("f_zero_crossings"),
-        (F.col("s2_w").cast("double") / (u * u)).alias("f_energy"),
+        *(c.alias(k) for k, c in feats.items()),
     )

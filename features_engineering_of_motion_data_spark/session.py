@@ -59,10 +59,10 @@ def get_spark(
         "spark.sql.adaptive.enabled": "true",
         "spark.sql.adaptive.coalescePartitions.enabled": "true",
         "spark.sql.session.timeZone": "UTC",
-        # modern parquet timestamps (µs), not legacy INT96: INT96 columns get
-        # NO footer min/max statistics, which silently disables both engines'
-        # row-group skipping and the tier manifest's file-level bucket_start
-        # bounds (sources/sinks.py data skipping)
+        # modern parquet timestamps (µs), not legacy INT96: this pins the
+        # bytes of the jobs' tier files, and INT96 columns get NO footer
+        # min/max statistics, so readers could not skip row groups on
+        # bucket_start
         "spark.sql.parquet.outputTimestampType": "TIMESTAMP_MICROS",
         "spark.sql.execution.arrow.pyspark.enabled": "true",
         # bound Arrow batches crossing the JVM<->Python boundary (SURVEY §4)

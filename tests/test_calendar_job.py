@@ -1,8 +1,7 @@
 """Calendar tiers on the deploy surface (VERDICT r3 item 5): jobs/rollup.py
 accepts ``--tiers 1m,1d,month``, producing a month tier bit-equal to
 rollup_merge_calendar via a DIFFERENT merge path (1d→month vs 1m→month —
-equal by the tested associativity of the merge algebra), and
-apply_retention covers calendar tier tables like any fixed tier.
+equal by the tested associativity of the merge algebra).
 """
 
 from __future__ import annotations
@@ -22,11 +21,6 @@ from features_engineering_of_motion_data_spark.operators.features import (
 )
 from features_engineering_of_motion_data_spark.operators.rollup import (
     rollup_merge_calendar,
-)
-from features_engineering_of_motion_data_spark.sources.sinks import (
-    apply_retention,
-    read_tier,
-    write_tier,
 )
 from features_engineering_of_motion_data_spark.sources.transcripts import (
     read_transcripts,
@@ -84,39 +78,6 @@ def test_job_rejects_calendar_only_and_unknown(tiny_path, tmp_path):
         run(parse_args(base + ["--tiers", "month"]))
     with pytest.raises(SystemExit, match="unknown tier"):
         run(parse_args(base + ["--tiers", "1m,5m"]))
-
-
-def test_retention_policy_covers_calendar_tier(spark, tiny_path, tmp_path):
-    from pyspark.sql import functions as F
-
-    turns = read_transcripts(spark, tiny_path)
-    stats = aggregate_tier(derive_channels(turns), "1h")
-    month1 = finalize_features(rollup_merge_calendar(stats, "month"))
-    # the tiny fixture spans one calendar month; retention needs >= 2
-    # partitions, so add a shifted copy (values are irrelevant to expiry —
-    # only the bucket_date partitioning matters)
-    month = month1.unionByName(
-        month1.withColumn(
-            "bucket_start", F.col("bucket_start") + F.expr("INTERVAL 32 DAY")
-        ).withColumn(
-            "bucket_start", F.date_trunc("month", F.col("bucket_start"))
-        )
-    )
-    root = str(tmp_path / "root")
-    tier_path = os.path.join(root, "tier=month")
-    write_tier(month, tier_path)
-
-    dates = sorted(
-        pd.to_datetime(r.bucket_start).date()
-        for r in month.select("bucket_start").distinct().collect()
-    )
-    assert len(dates) >= 2
-    cutoff_now = dates[-1]  # keep only partitions >= dates[-1] with keep=0
-    res = apply_retention(spark, root, {"month": 0}, now=str(cutoff_now))
-    assert res["month"]["dropped_partitions"] == len(dates) - 1
-    survivors = read_tier(spark, tier_path).select("bucket_start").distinct()
-    got = sorted(pd.to_datetime(r.bucket_start).date() for r in survivors.collect())
-    assert got == [dates[-1]]
 
 
 if __name__ == "__main__":

@@ -7,6 +7,9 @@ relative, are followed through the package with ``ast`` (importing a module
 also runs its parent packages' ``__init__``), and every module under the
 package must be reached. A module no product path imports is dead weight:
 delete it instead of keeping it alive with its own tests.
+
+The package root ``__init__`` imports nothing: it runs on every import of
+any package module, so one re-export there would mark its target reached.
 """
 
 from __future__ import annotations
@@ -23,6 +26,17 @@ EXEMPT = {
         "salted two-phase aggregation is named in the north star; whether it "
         "is wired into the rollup job or folded into aggregate_tier waits on "
         "the exchange.skew measurement (ROADMAP item 6)"
+    ),
+    f"{PKG}.operators.gapfill": (
+        "turn-level linear gap-fill, part of the paper's feature set (ROADMAP "
+        "north star); q38/q50 fill at the tier level only"
+    ),
+    f"{PKG}.operators.sliding": (
+        "the reference library's 50%-overlap windows (ROADMAP north star); "
+        "q19 is an events-fixture row frame, not these windows"
+    ),
+    f"{PKG}.operators.metrics": (
+        "per-tier metrics for the job's run report (ROADMAP item 8)"
     ),
 }
 
@@ -70,6 +84,13 @@ def _reached(mods: dict[str, Path], entries: list[Path]) -> set[str]:
 
 
 def test_every_package_module_is_reached():
+    root = ast.parse((ROOT / PKG / "__init__.py").read_text(encoding="utf-8"))
+    imports = [
+        n.lineno
+        for n in ast.walk(root)
+        if isinstance(n, (ast.Import, ast.ImportFrom))
+    ]
+    assert not imports, f"{PKG}/__init__.py imports at lines {imports}"
     entries = [
         ROOT / "__spark_entry__.py",
         ROOT / "bench.py",
