@@ -25,22 +25,28 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 TIER_US = {"1m": 60_000_000, "1h": 3_600_000_000, "1d": 86_400_000_000}
 
-#: stat columns carried by every tier's sufficient-statistics frame
-STAT_COLS = [
-    "n",
-    "s1",
-    "s2",
-    "min_raw",
-    "max_raw",
-    "zc",
-    "first_ts_us",
-    "last_ts_us",
-    "first_val",
-    "last_val",
+#: the ten sufficient statistics every tier frame carries after its key
+#: (conv_id, channel, bucket), in emission order and with their Spark types —
+#: the one declaration of the format (DESIGN.md §1). s2 = Σx² is
+#: decimal(38,0): latency-µs squared exceeds int64; decimal sums are exact
+#: integers, keeping every merge bit-exact. first/last ts are epoch µs.
+STAT_FIELDS = [
+    T.StructField("n", T.LongType()),
+    T.StructField("s1", T.LongType()),
+    T.StructField("s2", T.DecimalType(38, 0)),
+    T.StructField("min_raw", T.LongType()),
+    T.StructField("max_raw", T.LongType()),
+    T.StructField("zc", T.LongType()),
+    T.StructField("first_ts_us", T.LongType()),
+    T.StructField("last_ts_us", T.LongType()),
+    T.StructField("first_val", T.LongType()),
+    T.StructField("last_val", T.LongType()),
 ]
+STAT_COLS = [f.name for f in STAT_FIELDS]
 
 
 def _sign(col: Column) -> Column:
@@ -76,9 +82,8 @@ def aggregate_tier(channels: DataFrame, tier: str) -> DataFrame:
     window pass, so the zero-crossing indicator (:func:`bucket_and_cross`)
     is a row-local expression and this whole operator is one hash aggregation
     that reuses the existing hash(conv_id) partitioning — no extra shuffle.
-
-    s2 = Σx² is decimal(38,0): latency-µs squared exceeds int64; decimal sums
-    are exact integers, keeping every merge bit-exact.
+    It is the one builder of :data:`STAT_FIELDS` from channel rows; the
+    first/last statistics follow ``turn_idx`` order.
     """
     b, cross = bucket_and_cross(tier)
     x_dec = F.col("x").cast("decimal(19,0)")
@@ -99,6 +104,29 @@ def aggregate_tier(channels: DataFrame, tier: str) -> DataFrame:
             F.max_by("x", "turn_idx").alias("last_val"),
         )
     )
+
+
+def merge_stats(boundary: str | None = None) -> list[Column]:
+    """The ten aggregates that merge partial statistics frames into one
+    :data:`STAT_FIELDS` row per group: integer adds for n/s1/s2/zc,
+    min/max for the extrema, first/last carried by the partials'
+    ``first_ts_us``/``last_ts_us``. A cross-bucket merge names its
+    ``boundary`` column, whose sum — the zero crossings of consecutive-turn
+    pairs that span two partials (DESIGN.md §3) — is added to zc.
+    """
+    zc = F.sum("zc") if boundary is None else F.sum("zc") + F.sum(boundary)
+    return [
+        F.sum("n").alias("n"),
+        F.sum("s1").alias("s1"),
+        F.sum("s2").cast("decimal(38,0)").alias("s2"),
+        F.min("min_raw").alias("min_raw"),
+        F.max("max_raw").alias("max_raw"),
+        zc.alias("zc"),
+        F.min("first_ts_us").alias("first_ts_us"),
+        F.max("last_ts_us").alias("last_ts_us"),
+        F.min_by("first_val", "first_ts_us").alias("first_val"),
+        F.max_by("last_val", "last_ts_us").alias("last_val"),
+    ]
 
 
 def unit_divisor(channel: Column) -> Column:

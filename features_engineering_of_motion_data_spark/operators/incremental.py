@@ -60,8 +60,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from .channels import derive_channels
-from .features import TIER_US, aggregate_tier
-from .rollup import cascade_from_stats, split_tiers
+from .features import aggregate_tier, merge_stats
+from .rollup import cascade_from_stats, finest_tier
 from ..sources.transcripts import TRANSCRIPT_SCHEMA
 
 
@@ -147,22 +147,14 @@ def merge_partial_stats(a: DataFrame, b: DataFrame) -> DataFrame:
 
     Rows with the same (conv_id, channel, bucket_us) — one partial from the
     already-aggregated past, one from a delta — combine associatively:
-    integer adds for n/s1/s2/zc, min/max for the extrema, first/last carried
-    by first_ts_us order. NO boundary zero-crossing term (see module
-    docstring). Buckets present in only one side pass through bit-unchanged.
+    :func:`~.features.merge_stats` with NO boundary zero-crossing term (see
+    module docstring). Buckets present in only one side pass through
+    bit-unchanged.
     """
-    u = a.unionByName(b)
-    return u.groupBy("conv_id", "channel", "bucket_us").agg(
-        F.sum("n").alias("n"),
-        F.sum("s1").alias("s1"),
-        F.sum("s2").cast("decimal(38,0)").alias("s2"),
-        F.min("min_raw").alias("min_raw"),
-        F.max("max_raw").alias("max_raw"),
-        F.sum("zc").alias("zc"),
-        F.min_by("first_ts_us", "first_ts_us").alias("first_ts_us"),
-        F.max_by("last_ts_us", "last_ts_us").alias("last_ts_us"),
-        F.min_by("first_val", "first_ts_us").alias("first_val"),
-        F.max_by("last_val", "last_ts_us").alias("last_val"),
+    return (
+        a.unionByName(b)
+        .groupBy("conv_id", "channel", "bucket_us")
+        .agg(*merge_stats())
     )
 
 
@@ -194,10 +186,9 @@ def incremental_cascade(
     restricted to the delta-affected conv_id hash ranges and replaces their
     ``tier=<T>/part=<K>/`` directories whole, all of them in one
     dynamic-overwrite write."""
-    fixed, _ = split_tiers(tiers)
-    if not fixed:  # {} for no tiers, the calendar-only KeyError otherwise
-        return cascade_from_stats(old_1m_stats, tiers)
-    finest = min(fixed, key=lambda t: TIER_US[t])
+    if not tiers:
+        return {}
+    finest = finest_tier(tiers)
     merged = merge_partial_stats(
         old_1m_stats, delta_tier_stats(old_1m_stats, delta_turns, finest)
     )

@@ -22,10 +22,16 @@ of transcripts by construction (a conversation's turns happen in order).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame, Window, WindowSpec
 from pyspark.sql import functions as F
 
-from .features import TIER_US, _sign, aggregate_tier, finalize_features
+from .features import (
+    TIER_US,
+    _sign,
+    aggregate_tier,
+    finalize_features,
+    merge_stats,
+)
 
 
 def rollup_merge(stats: DataFrame, to_tier: str) -> DataFrame:
@@ -60,30 +66,22 @@ def rollup_merge_calendar(stats: DataFrame, unit: str = "month") -> DataFrame:
     return _merge_to_coarse(stats, coarse)
 
 
-def _merge_to_coarse(stats: DataFrame, coarse) -> DataFrame:
-    coarse = coarse.alias("_coarse")
-    w = Window.partitionBy("conv_id", "channel", "_coarse").orderBy("bucket_us")
+def _boundary(w: WindowSpec) -> Column:
+    """1 iff the consecutive-turn pair (last turn of the previous partial in
+    ``w``, first turn of this one) crosses zero (DESIGN.md §3), else 0."""
     prev_last = F.lag("last_val").over(w)
-    boundary = (
+    return (
         prev_last.isNotNull() & (_sign(prev_last) * _sign(F.col("first_val")) < 0)
     ).cast("long")
 
+
+def _merge_to_coarse(stats: DataFrame, coarse) -> DataFrame:
+    w = Window.partitionBy("conv_id", "channel", "_coarse").orderBy("bucket_us")
     return (
         stats.withColumn("_coarse", coarse)
-        .withColumn("_boundary", boundary)
+        .withColumn("_boundary", _boundary(w))
         .groupBy("conv_id", "channel", F.col("_coarse").alias("bucket_us"))
-        .agg(
-            F.sum("n").alias("n"),
-            F.sum("s1").alias("s1"),
-            F.sum("s2").cast("decimal(38,0)").alias("s2"),
-            F.min("min_raw").alias("min_raw"),
-            F.max("max_raw").alias("max_raw"),
-            (F.sum("zc") + F.sum("_boundary")).alias("zc"),
-            F.min_by("first_ts_us", "bucket_us").alias("first_ts_us"),
-            F.max_by("last_ts_us", "bucket_us").alias("last_ts_us"),
-            F.min_by("first_val", "bucket_us").alias("first_val"),
-            F.max_by("last_val", "bucket_us").alias("last_val"),
-        )
+        .agg(*merge_stats("_boundary"))
     )
 
 
@@ -120,11 +118,7 @@ def rolling_merge(stats: DataFrame, tier: str, width: int) -> DataFrame:
     step = TIER_US[tier]
     order = Window.partitionBy("conv_id", "channel").orderBy("bucket_us")
     frame = order.rangeBetween(-(width - 1) * step, 0)
-    prev_last = F.lag("last_val").over(order)
-    boundary = (
-        prev_last.isNotNull() & (_sign(prev_last) * _sign(F.col("first_val")) < 0)
-    ).cast("long")
-    return stats.withColumn("_boundary", boundary).select(
+    return stats.withColumn("_boundary", _boundary(order)).select(
         "conv_id",
         "channel",
         "bucket_us",
@@ -162,6 +156,20 @@ def split_tiers(tiers: tuple[str, ...]) -> tuple[list[str], list[str]]:
     return fixed, cal
 
 
+def finest_tier(tiers: tuple[str, ...]) -> str:
+    """The finest fixed tier of a tier list: the one base-aggregated from
+    channel rows, which every other tier merges from. Raises KeyError on a
+    tier in neither vocabulary and ValueError on a list with no fixed tier
+    (calendar buckets have no fixed µs width to base-aggregate at)."""
+    fixed, cal = split_tiers(tiers)
+    if not fixed:
+        raise ValueError(
+            f"calendar tiers {cal} merge from a fixed tier; include one of "
+            f"{sorted(TIER_US)}"
+        )
+    return min(fixed, key=TIER_US.get)
+
+
 def cascade_from_stats(
     base_stats: DataFrame, tiers: tuple[str, ...]
 ) -> dict[str, DataFrame]:
@@ -176,19 +184,13 @@ def cascade_from_stats(
     merge from the COARSEST fixed tier's stats — the cheapest path, and
     bit-identical to merging from any finer tier because the merge algebra
     is associative (path independence gated in tests/test_tiers_vs_oracle).
-    At least one fixed tier is required (calendar buckets have no fixed
-    µs width to base-aggregate at).
+    At least one fixed tier is required (:func:`finest_tier`).
     """
     if not tiers:
         return {}
+    stats = {finest_tier(tiers): base_stats}
     fixed, cal = split_tiers(tiers)
-    if not fixed:
-        raise KeyError(
-            f"calendar tiers {cal} merge from a fixed tier; include one of "
-            f"{sorted(TIER_US)}"
-        )
-    order = sorted(fixed, key=lambda t: TIER_US[t])
-    stats = {order[0]: base_stats}
+    order = sorted(fixed, key=TIER_US.get)
     for fine, coarse in zip(order, order[1:]):
         stats[coarse] = rollup_merge(stats[fine], coarse)
     for unit in sorted(cal, key=CAL_ORDER.get):
@@ -205,8 +207,4 @@ def cascade(channels: DataFrame, tiers: tuple[str, ...] = ("1m", "1h", "1d")) ->
     """
     if not tiers:
         return {}
-    fixed, _ = split_tiers(tiers)
-    if not fixed:
-        raise KeyError(f"include at least one fixed tier of {sorted(TIER_US)}")
-    finest = min(fixed, key=lambda t: TIER_US[t])
-    return cascade_from_stats(aggregate_tier(channels, finest), tiers)
+    return cascade_from_stats(aggregate_tier(channels, finest_tier(tiers)), tiers)

@@ -33,14 +33,10 @@ def sliding_features(channels: DataFrame, window: int = 8) -> DataFrame:
     w = Window.partitionBy("conv_id", "channel").orderBy("turn_idx")
     frame = w.rowsBetween(-(window - 1), 0)
 
-    # row-local crossing indicator vs the previous element of the series;
-    # summed over the frame it counts crossings among consecutive pairs fully
-    # inside the window, EXCEPT the pair entering the frame — subtract via
-    # the (window-1)-deep frame of the indicator's own lag? Simpler and
-    # exact: a pair (i-1, i) is inside window ending at j iff i > j-window+1,
-    # i.e. all pairs of the frame except the first row's. The first row of
-    # the frame contributes cross(first), so zc = sum(cross over frame) −
-    # cross(first row of frame) = sum over frame of cross − lag(cross, window−1).
+    # cross(i) marks a zero crossing of the pair (i−1, i) of the series. The
+    # window ending at j holds the pairs whose both turns lie in its frame:
+    # window zc = Σ cross over the frame − cross of the frame's first row,
+    # the pair entering the frame (lag(cross, window−1); 0 before it exists)
     cross = (
         F.col("prev_x").isNotNull()
         & (_sign(F.col("prev_x")) * _sign(F.col("x")) < 0)

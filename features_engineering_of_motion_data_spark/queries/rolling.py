@@ -21,10 +21,10 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..operators.features import aggregate_tier, pinned_features
 from ..operators.matrix import FEATURES, wide_rolling_matrix
 from ..operators.rollup import rolling_merge
-from .events import HOUR_US, _base, _bucket
-from .signal import _dec
+from .events import HOUR_US, _base
 from .sqlexact import split_dbl
 
 _C_SQL = """
@@ -44,7 +44,9 @@ def q78_rolling_features_24h(spark: SparkSession, sf_dir: str) -> DataFrame:
     """24h rolling features per (conv, present 1h end-bucket) via the
     rolling_merge operator: n, Σx, zero crossings, min/max of the deviation
     channel x = c − 100.00 over the trailing 24 one-hour buckets, plus the
-    pinned mean/std finalize.
+    pinned mean/std finalize. The events form a one-channel frame
+    (``turn_idx`` numbers each user's events in (ts, event_id) order) that
+    :func:`~..operators.features.aggregate_tier` aggregates, as in q80.
 
     Scale shape: base lag window, 1h hash agg, boundary lag window, and the
     RANGE rolling frame all cluster under hash(conv) — a single exchange,
@@ -52,50 +54,22 @@ def q78_rolling_features_24h(spark: SparkSession, sf_dir: str) -> DataFrame:
     many raw rows the day held.
     """
     w = Window.partitionBy("user_id").orderBy("ts_us", "event_id")
-    d = (
+    ch = (
         _base(spark, sf_dir)
         .withColumn("x", F.col("c") - F.lit(_DEV_CENTS))
+        .withColumn("turn_idx", F.row_number().over(w))
         .withColumn("prev_x", F.lag("x").over(w))
-        .withColumn("prev_ts", F.lag("ts_us").over(w))
-    )
-    b = _bucket(F.col("ts_us"), HOUR_US)
-    prev_b = _bucket(F.col("prev_ts"), HOUR_US)
-    sgn = lambda col: F.when(col < 0, F.lit(-1)).otherwise(F.lit(1))  # noqa: E731
-    cross = (
-        F.col("prev_ts").isNotNull()
-        & (prev_b == b)
-        & (sgn(F.col("prev_x")) * sgn(F.col("x")) < 0)
-    ).cast("long")
-    key = F.struct("ts_us", "event_id")
-    stats = (
-        d.withColumn("bucket_us", b)
-        .withColumn("_cross", cross)
-        .groupBy(
-            F.col("user_id").alias("conv_id"),
-            F.lit("value_dev").alias("channel"),
-            "bucket_us",
-        )
-        .agg(
-            F.count(F.lit(1)).alias("n"),
-            F.sum("x").alias("s1"),
-            F.sum(_dec(F.col("x")) * _dec(F.col("x")))
-            .cast("decimal(38,0)")
-            .alias("s2"),
-            F.min("x").alias("min_raw"),
-            F.max("x").alias("max_raw"),
-            F.sum("_cross").alias("zc"),
-            F.min_by("ts_us", key).alias("first_ts_us"),
-            F.max_by("ts_us", key).alias("last_ts_us"),
-            F.min_by("x", key).alias("first_val"),
-            F.max_by("x", key).alias("last_val"),
+        .withColumn("prev_ts_us", F.lag("ts_us").over(w))
+        .selectExpr(
+            "user_id as conv_id", "'value_dev' as channel", "turn_idx",
+            "ts_us", "x", "prev_x", "prev_ts_us",
         )
     )
-    r = rolling_merge(stats, "1h", ROLL_WIDTH)
-    nd = F.col("n").cast("double")
-    m = F.col("s1").cast("double") / nd
-    q = F.col("s2").cast("double") / nd
-    var = q - m * m
-    var = F.when(var < 0, F.lit(0.0)).otherwise(var)
+    r = rolling_merge(aggregate_tier(ch, "1h"), "1h", ROLL_WIDTH)
+    feats = pinned_features(
+        *(F.col(c) for c in ("n", "s1", "s2", "min_raw", "max_raw", "zc")),
+        F.lit(1.0),
+    )
     return r.select(
         "conv_id",
         "bucket_us",
@@ -104,8 +78,8 @@ def q78_rolling_features_24h(spark: SparkSession, sf_dir: str) -> DataFrame:
         "zc",
         F.col("min_raw").alias("min_x"),
         F.col("max_raw").alias("max_x"),
-        m.alias("w_mean"),
-        F.sqrt(var).alias("w_std"),
+        feats["f_mean"].alias("w_mean"),
+        feats["f_std"].alias("w_std"),
     )
 
 

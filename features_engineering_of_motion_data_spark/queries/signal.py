@@ -1089,8 +1089,7 @@ def q56_live_coverage_1h(
     only double is the final pinned division by the bucket span.
 
     Scale shape: one window + one hash agg, both keyed on (conv, bucket) —
-    a single shuffle, salting-compatible (operators/skew.py) since the
-    window key equals the agg key.
+    a single shuffle, since the window key equals the agg key.
     """
     b = _base(spark, sf_dir).select(
         "user_id",

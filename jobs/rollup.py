@@ -77,13 +77,14 @@ from features_engineering_of_motion_data_spark.operators.channels import (
 )
 from features_engineering_of_motion_data_spark.operators.features import (
     STAT_COLS,
+    STAT_FIELDS,
     TIER_US,
     aggregate_tier,
 )
 from features_engineering_of_motion_data_spark.operators.rollup import (
     CAL_UNITS,
     cascade_from_stats,
-    split_tiers,
+    finest_tier,
 )
 from features_engineering_of_motion_data_spark.session import get_spark
 from features_engineering_of_motion_data_spark.sources.checkpoints import (
@@ -103,25 +104,29 @@ from features_engineering_of_motion_data_spark.sources.transcripts import (
 )
 
 
-#: the columns of a written tier that an incremental refresh reads back: the
-#: tier key, the sufficient statistics (aggregate_tier's types) and the
-#: range partition column
-_OLD_TIER_SCHEMA = T.StructType(
+#: explicit read schemas of the two stats frames the job reads back, built
+#: from the declared statistics: an empty input writes no partition
+#: directory, and a schema-less parquet read of that would fail, or would
+#: run a footer-inference job first. The ``tier=<finest>`` output (read back
+#: by an incremental refresh) keys buckets by ``bucket_start`` and names its
+#: ``part=00003`` directories, read as int; the ``_stage`` keeps
+#: ``bucket_us`` and the bigint hash range.
+_TIER_STATS_SCHEMA = T.StructType(
     [
         T.StructField("conv_id", T.StringType()),
         T.StructField("channel", T.StringType()),
         T.StructField("bucket_start", T.TimestampType()),
-        T.StructField("n", T.LongType()),
-        T.StructField("s1", T.LongType()),
-        T.StructField("s2", T.DecimalType(38, 0)),
-        T.StructField("min_raw", T.LongType()),
-        T.StructField("max_raw", T.LongType()),
-        T.StructField("zc", T.LongType()),
-        T.StructField("first_ts_us", T.LongType()),
-        T.StructField("last_ts_us", T.LongType()),
-        T.StructField("first_val", T.LongType()),
-        T.StructField("last_val", T.LongType()),
+        *STAT_FIELDS,
         T.StructField("part", T.IntegerType()),
+    ]
+)
+_STAGE_SCHEMA = T.StructType(
+    [
+        T.StructField("conv_id", T.StringType()),
+        T.StructField("channel", T.StringType()),
+        T.StructField("bucket_us", T.LongType()),
+        *STAT_FIELDS,
+        T.StructField("part", T.LongType()),
     ]
 )
 
@@ -202,9 +207,6 @@ def _write_stage(
         "finest": finest,
         "rows_in": {str(k): int(rows.get(f"p{k}") or 0) for k in range(args.num_parts)},
         "stage_wall_s": round(time.perf_counter() - t0, 3),
-        # explicit read schema: an empty input writes NO partition dirs, and
-        # a schema-less parquet read of that would fail
-        "schema": staged.schema.json(),
     }
     meta.update(extra or {})
     tmp = os.path.join(stage_dir, "meta.json.tmp")
@@ -237,7 +239,7 @@ def _incremental_stage(spark, args, finest: str, prior: dict):
     ``part`` and ``rows`` maps ``p<K>`` to the range's delta-turn count.
 
     Old stats are read back from the existing ``tier=<finest>`` output with
-    an explicit schema (:data:`_OLD_TIER_SCHEMA`), so no footer-inference
+    an explicit schema (:data:`_TIER_STATS_SCHEMA`), so no footer-inference
     job runs before the stage write; without that directory (a prior run
     over an empty input) they are an empty frame of the same schema. The
     delta feeds one plan branch, the channel pass with seam phantoms; the
@@ -256,11 +258,11 @@ def _incremental_stage(spark, args, finest: str, prior: dict):
     affected = [k for k in range(args.num_parts) if rows.get(f"p{k}", 0) > 0]
     old_dir = os.path.join(args.output, f"tier={finest}")
     if os.path.isdir(old_dir):
-        old = spark.read.schema(_OLD_TIER_SCHEMA).parquet(old_dir)
+        old = spark.read.schema(_TIER_STATS_SCHEMA).parquet(old_dir)
     else:
         # empty ranges write no directory: a prior run over an empty input
         # left nothing to merge into
-        old = spark.createDataFrame([], _OLD_TIER_SCHEMA)
+        old = spark.createDataFrame([], _TIER_STATS_SCHEMA)
     old_stats = (
         old.filter(F.col("part").isin(affected))
         .select(
@@ -389,7 +391,6 @@ def _load_stage_meta(stage_dir: str, snapshot: str, args, finest: str):
         meta.get("snapshot_id") == snapshot
         and meta.get("num_parts") == args.num_parts
         and meta.get("finest") == finest
-        and meta.get("schema")
     ):
         return meta
     return None
@@ -434,17 +435,13 @@ def _write_archive(spark, args, snapshot: str) -> None:
 def run(args) -> int:
     tiers = tuple(args.tiers.split(","))
     try:
-        fixed, cal = split_tiers(tiers)
+        finest = finest_tier(tiers)
     except KeyError as e:
         raise SystemExit(
             f"unknown tier {e.args[0]!r}; valid: {sorted(TIER_US) + list(CAL_UNITS)}"
         )
-    if not fixed:
-        raise SystemExit(
-            f"calendar tiers {cal} merge from a fixed tier; include one of "
-            f"{sorted(TIER_US)}"
-        )
-    finest = min(fixed, key=lambda t: TIER_US[t])
+    except ValueError as e:
+        raise SystemExit(str(e))
     ckpt = args.ckpt or os.path.join(args.output, "_ckpt.jsonl")
     snapshot = resolve_snapshot(args.input)
     entries = snapshot_manifest(args.input)
@@ -500,9 +497,9 @@ def run(args) -> int:
         else:
             meta = _build_stage(spark, args, snapshot, finest, stage_dir)
 
-    staged = spark.read.schema(
-        T.StructType.fromJson(json.loads(meta["schema"]))
-    ).parquet(os.path.join(stage_dir, "stats"))
+    staged = spark.read.schema(_STAGE_SCHEMA).parquet(
+        os.path.join(stage_dir, "stats")
+    )
 
     pending = [
         part

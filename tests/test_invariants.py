@@ -15,9 +15,10 @@ from features_engineering_of_motion_data_spark.sources.transcripts import (
 
 
 def test_text_equality_checksum(spark, tiny_path, tiny_pdf):
-    """Whole-table per-turn text equality: xor of xxhash64(conv, turn, text)
-    over the deduped frame must match an independently computed pandas xor.
-    Catches any text mutation/reorder/loss anywhere in the scan+dedup path."""
+    """Whole-table per-turn text equality: the deduped frame's per-row
+    md5(text), in (conv_id, turn_idx) order, must equal the list computed
+    by oracle.features.dedup on the raw parquet, keys included. Catches any
+    text mutation/reorder/loss anywhere in the scan+dedup path."""
     ded = dedup_turns(read_transcripts(spark, tiny_path))
     spark_rows = (
         ded.select("conv_id", "turn_idx", F.md5(F.col("text").cast("binary")).alias("h"))

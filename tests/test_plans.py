@@ -401,7 +401,7 @@ def test_incremental_stage_reads_old_tier_twice(spark, seam_turns, tmp_path):
     assert _scans(staged, "tier=1m") == 2
     # the explicit read schema matches what the job wrote
     written = spark.read.parquet(os.path.join(args.output, "tier=1m")).schema
-    for f in rollup_job._OLD_TIER_SCHEMA:
+    for f in rollup_job._TIER_STATS_SCHEMA:
         assert written[f.name].dataType == f.dataType, f.name
 
 

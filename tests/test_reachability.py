@@ -22,11 +22,6 @@ PKG = "features_engineering_of_motion_data_spark"
 
 #: unreached modules kept on purpose, each with its reason
 EXEMPT = {
-    f"{PKG}.operators.skew": (
-        "salted two-phase aggregation is named in the north star; whether it "
-        "is wired into the rollup job or folded into aggregate_tier waits on "
-        "the exchange.skew measurement (ROADMAP item 6)"
-    ),
     f"{PKG}.operators.gapfill": (
         "turn-level linear gap-fill, part of the paper's feature set (ROADMAP "
         "north star); q38/q50 fill at the tier level only"
