@@ -15,7 +15,6 @@ legacy inline child; run_scaling.py parses that line.
 Usage: python child_cascade.py <cores> <input> <repo> <shuffle_parts>
 Env:   SPARK_GRAFT_EXTRA_CONF — JSON dict of extra Spark conf (applied
        identically at every core count, so N-vs-4N stays apples-to-apples).
-       SPARK_GRAFT_NO_CACHE=1 — fall back to the legacy uncached cascade.
 """
 
 import json
@@ -84,19 +83,14 @@ def main() -> None:
     def force(df):
         return df.select(F.count(F.lit(1))).collect()[0][0]
 
-    cached = os.environ.get("SPARK_GRAFT_NO_CACHE") != "1"
     # JIT warmup on a slice (not counted)
     force(aggregate_tier(derive_channels(turns.limit(100_000)), "1m"))
 
     cpu0 = _proc_cpu_s()
     t0 = time.perf_counter()
-    s1m = aggregate_tier(derive_channels(turns), "1m")
-    if cached:
-        s1m = s1m.persist()
+    s1m = aggregate_tier(derive_channels(turns), "1m").persist()
     pts = force(finalize_features(s1m))
-    s1h = rollup_merge(s1m, "1h")
-    if cached:
-        s1h = s1h.persist()
+    s1h = rollup_merge(s1m, "1h").persist()
     pts += force(finalize_features(s1h))
     pts += force(finalize_features(rollup_merge(s1h, "1d")))
     dt = time.perf_counter() - t0

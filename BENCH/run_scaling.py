@@ -319,11 +319,8 @@ def main() -> None:
         "input": os.path.basename(args.input),
         # which measurement child produced the samples: the staged cascade
         # (1m persisted, 1h/1d merge from it — the production job shape,
-        # BENCH/child_cascade.py) or its uncached fallback. Records made by
-        # the two are different workloads; keep them in separate files.
-        "child": ("cascade_uncached"
-                  if os.environ.get("SPARK_GRAFT_NO_CACHE") == "1"
-                  else "cascade_cached"),
+        # BENCH/child_cascade.py)
+        "child": "cascade_cached",
         "extra_conf": json.loads(os.environ.get("SPARK_GRAFT_EXTRA_CONF", "{}")),
         "shuffle_parts_mult": args.parts_mult,
         "feature_points": points,

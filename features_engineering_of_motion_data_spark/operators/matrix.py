@@ -61,10 +61,9 @@ FEATURES = (
 )
 
 
-def matrix_columns(channels=None) -> list[str]:
+def matrix_columns() -> list[str]:
     """The matrix's value-column names, in emission order."""
-    chans = CHANNELS if channels is None else channels
-    return [f"{ch}__{f}" for ch in chans for f in FEATURES]
+    return [f"{ch}__{f}" for ch in CHANNELS for f in FEATURES]
 
 
 def _channel_aggs(ch: str, cross: Column) -> list[Column]:
@@ -99,32 +98,23 @@ def _channel_features(ch: str, u: float) -> list[Column]:
     ]
 
 
-def wide_tier_matrix(
-    channels_df: DataFrame, tier: str, channels=None
-) -> DataFrame:
+def wide_tier_matrix(channels_df: DataFrame, tier: str) -> DataFrame:
     """One row per (conv_id, bucket_start); columns ``{ch}__{feature}``.
 
     Input is :func:`~.channels.derive_channels` output (the long channel
     frame with ``prev_x``/``prev_ts_us`` adjacency).  ``tier`` is a
     fixed-width tier key from :data:`~.features.TIER_US`.
     """
-    chans = CHANNELS if channels is None else channels
     b, cross = bucket_and_cross(tier)
-    aggs: list[Column] = []
-    for ch in chans:
-        aggs.extend(_channel_aggs(ch, cross))
     g = (
         channels_df.withColumn("bucket_us", b)
         .groupBy("conv_id", "bucket_us")
-        .agg(*aggs)
+        .agg(*(a for ch in CHANNELS for a in _channel_aggs(ch, cross)))
     )
-    outs: list[Column] = []
-    for ch, u in (chans.items() if hasattr(chans, "items") else chans):
-        outs.extend(_channel_features(ch, u))
     return g.select(
         "conv_id",
         F.timestamp_micros(F.col("bucket_us")).alias("bucket_start"),
-        *outs,
+        *(c for ch, u in CHANNELS.items() for c in _channel_features(ch, u)),
     )
 
 

@@ -1,4 +1,5 @@
-"""Per-partition checkpoint manifest (SURVEY §2.1 S4, §3 E3).
+"""Per-partition checkpoint manifest (SURVEY §2.1 S4, §3 E3) and the
+atomic JSON writer of the jobs' lineage sidecars.
 
 JSON-lines file; one record per completed partition range carrying lineage:
 input snapshot-id, partition key, rows-in / points-out metrics and wall time.
@@ -12,6 +13,26 @@ from __future__ import annotations
 import json
 import os
 import time
+
+
+def write_json(path: str, obj) -> None:
+    """Write a lineage sidecar atomically: a tmp file, flushed and fsynced,
+    then renamed over ``path``. A crash leaves the old file or the new one,
+    never a truncated one."""
+    tmp = path + ".tmp"
+    with open(tmp, "w", encoding="utf-8") as f:
+        json.dump(obj, f, sort_keys=True)
+        f.flush()
+        os.fsync(f.fileno())
+    os.replace(tmp, path)
+
+
+def read_json(path: str):
+    """A sidecar written by :func:`write_json`, or None when absent."""
+    if not os.path.exists(path):
+        return None
+    with open(path, encoding="utf-8") as f:
+        return json.load(f)
 
 
 def load_manifest(path: str) -> list[dict]:

@@ -28,7 +28,6 @@ overwrite, and the manifest is written only after the write commits.
 from __future__ import annotations
 
 import argparse
-import json
 import os
 import sys
 import time
@@ -48,6 +47,7 @@ from features_engineering_of_motion_data_spark.operators.matrix import (
 )
 from features_engineering_of_motion_data_spark.operators.features import TIER_US
 from features_engineering_of_motion_data_spark.session import get_spark
+from features_engineering_of_motion_data_spark.sources.checkpoints import write_json
 from features_engineering_of_motion_data_spark.sources.transcripts import (
     read_transcripts,
     resolve_snapshot,
@@ -139,8 +139,7 @@ def run(args) -> int:
         "null_semantics": "channel absent in the row's end bucket",
         "written_at": time.strftime("%Y-%m-%dT%H:%M:%SZ", time.gmtime()),
     }
-    with open(os.path.join(args.output, "_matrix_manifest.json"), "w") as f:
-        json.dump(manifest, f, indent=1)
+    write_json(os.path.join(args.output, "_matrix_manifest.json"), manifest)
     return 0
 
 

@@ -14,7 +14,8 @@ incremental-scan semantics), only the NEW data files are aggregated and
 merged into the existing tiers via operators/incremental.py — bit-equal to
 a full rerun, with only delta-affected hash ranges rewritten. Bootstraps to
 a full run when no prior snapshot is recorded; refuses (with a clear error)
-when the input history is not append-only.
+when the input history is not append-only, or when ``--num-parts`` or the
+finest tier differ from the recorded run's.
 
 Two phases, ONE scan of the input per job run (not per range):
 
@@ -39,13 +40,18 @@ Two phases, ONE scan of the input per job run (not per range):
    rows-in, points-out, an equal share of the write's wall) to the
    checkpoint manifest, in range order.  Points-out come from the parquet
    footers of the files just written — no data is re-read.  Resume is per
-   range: a crash inside the write leaves no records, so ``--resume``
+   range: a crash inside the write leaves no records, so the rerun
    rewrites every pending range (the overwrite is idempotent); a failed
    append leaves only its own range to redo, the other records still land,
    and the job then raises.
 
-``--resume`` skips completed ranges after verifying the snapshot is
-unchanged.  On success the stage directory is deleted.
+The stage is the one marker of an unfinished run, full or incremental: it
+lives from its ``meta.json`` until ``_input_manifest.json`` records its
+snapshot, which is written before the stage is deleted.  A run reuses its
+own snapshot's stage, with or without ``--resume``; it removes the stage
+of the recorded snapshot (a finished run's leftover) and refuses any other.
+``--resume`` lets a full run continue a checkpoint that already holds
+ranges, and refuses records of another snapshot.
 
 Scale note (10^12 turns): the previous design filtered the FULL input by
 ``pmod(xxhash64(conv_id))`` once per range — O(P·N) read amplification,
@@ -58,7 +64,6 @@ from __future__ import annotations
 
 import argparse
 import glob
-import json
 import os
 import shutil
 import sys
@@ -91,6 +96,8 @@ from features_engineering_of_motion_data_spark.sources.checkpoints import (
     append_record,
     completed_parts,
     load_manifest,
+    read_json,
+    write_json,
 )
 from features_engineering_of_motion_data_spark.operators.incremental import (
     delta_tier_stats,
@@ -160,7 +167,7 @@ def parse_args(argv=None):
         help="refresh mode: if <output>/_input_manifest.json records a prior "
              "snapshot and the input is an append of it, aggregate only the "
              "new data files and merge into the existing tiers (bit-equal to "
-             "a full rerun); bootstraps to a full run otherwise",
+             "a full rerun); bootstraps to a full run when none is recorded",
     )
     p.add_argument("--ckpt", default=None, help="manifest path (default <output>/_ckpt.jsonl)")
     p.add_argument("--master", default=None, help="override master (tests); spark-submit sets it otherwise")
@@ -209,10 +216,7 @@ def _write_stage(
         "stage_wall_s": round(time.perf_counter() - t0, 3),
     }
     meta.update(extra or {})
-    tmp = os.path.join(stage_dir, "meta.json.tmp")
-    with open(tmp, "w", encoding="utf-8") as f:
-        json.dump(meta, f, sort_keys=True)
-    os.replace(tmp, os.path.join(stage_dir, "meta.json"))
+    write_json(os.path.join(stage_dir, "meta.json"), meta)
     return meta
 
 
@@ -339,61 +343,55 @@ def _points_out(output: str, tier: str, part: int) -> int:
     )
 
 
-def _input_manifest_path(output: str) -> str:
-    return os.path.join(output, "_input_manifest.json")
-
-
 def _load_input_manifest(output: str):
-    p = _input_manifest_path(output)
-    if not os.path.exists(p):
-        return None
-    with open(p, encoding="utf-8") as f:
-        return json.load(f)
+    """The last fully-processed input snapshot, or None before the first."""
+    return read_json(os.path.join(output, "_input_manifest.json"))
 
 
 def _write_input_manifest(
-    output: str,
-    snapshot: str,
-    entries: list,
-    num_parts: int,
-    finest: str,
-    prior: dict | None,
+    output: str, snapshot: str, entries: list, num_parts: int, finest: str
 ) -> None:
-    """Record the fully-processed input snapshot (atomic; enables the next
-    --incremental run to diff against it). ``history`` accumulates every
-    completed snapshot so a later run can tell a *finished* refresh's
-    checkpoint records from an interrupted one's."""
-    history = list(prior.get("history", [prior["snapshot_id"]])) if prior else []
-    p = _input_manifest_path(output)
-    with open(p + ".tmp", "w", encoding="utf-8") as f:
-        json.dump(
-            {
-                "snapshot_id": snapshot,
-                "entries": entries,
-                "num_parts": num_parts,
-                "finest": finest,
-                "history": history + [snapshot],
-            },
-            f,
-            sort_keys=True,
-        )
-    os.replace(p + ".tmp", p)
+    """Record the fully-processed input snapshot: the diff base of the next
+    --incremental run, and what marks its stage as finished."""
+    write_json(
+        os.path.join(output, "_input_manifest.json"),
+        {
+            "snapshot_id": snapshot,
+            "entries": entries,
+            "num_parts": num_parts,
+            "finest": finest,
+        },
+    )
 
 
-def _load_stage_meta(stage_dir: str, snapshot: str, args, finest: str):
-    """Reusable stage metadata, or None if absent / keyed differently."""
-    path = os.path.join(stage_dir, "meta.json")
-    if not os.path.exists(path):
-        return None
-    with open(path, encoding="utf-8") as f:
-        meta = json.load(f)
-    if (
-        meta.get("snapshot_id") == snapshot
-        and meta.get("num_parts") == args.num_parts
-        and meta.get("finest") == finest
-    ):
-        return meta
-    return None
+def _load_stage_meta(
+    output: str, snapshot: str, recorded: dict | None, args, finest: str
+):
+    """Reusable metadata of this snapshot's stage, or None.
+
+    A stage ``_stage/snap=<id>/`` marks an unfinished run from its
+    ``meta.json`` until ``_input_manifest.json`` records ``<id>``; the
+    recorded snapshot's stage is a finished run's leftover and is removed.
+    This snapshot's stage is reused whenever it has the same ranges and
+    finest tier: once a refresh's tier write has started, only the stage
+    still holds its merge of the parent tiers. Any other stage belongs to
+    an unfinished run over another input, which may have written tiers
+    already, so the run refuses rather than merge on top of them."""
+    meta = None
+    for path in glob.glob(os.path.join(output, "_stage", "snap=*", "meta.json")):
+        m = read_json(path)
+        if recorded is not None and m["snapshot_id"] == recorded["snapshot_id"]:
+            shutil.rmtree(os.path.dirname(path), ignore_errors=True)
+        elif m["snapshot_id"] != snapshot:
+            raise SystemExit(
+                f"{os.path.dirname(path)} holds the unfinished run of snapshot "
+                f"{m['snapshot_id']}, and the input now resolves to {snapshot}; "
+                "rerun with that exact input to finish it, or run a full "
+                "rollup into a fresh output"
+            )
+        elif m["num_parts"] == args.num_parts and m["finest"] == finest:
+            meta = m
+    return meta
 
 
 def _write_archive(spark, args, snapshot: str) -> None:
@@ -426,10 +424,7 @@ def _write_archive(spark, args, snapshot: str) -> None:
     m["ratio"] = (
         round(m["encoded_bytes"] / m["raw_bytes"], 6) if m["raw_bytes"] else None
     )
-    tmp = os.path.join(dest, "_archive_meta.json.tmp")
-    with open(tmp, "w", encoding="utf-8") as f:
-        json.dump(m, f, sort_keys=True)
-    os.replace(tmp, os.path.join(dest, "_archive_meta.json"))
+    write_json(os.path.join(dest, "_archive_meta.json"), m)
 
 
 def run(args) -> int:
@@ -445,35 +440,30 @@ def run(args) -> int:
     ckpt = args.ckpt or os.path.join(args.output, "_ckpt.jsonl")
     snapshot = resolve_snapshot(args.input)
     entries = snapshot_manifest(args.input)
-    prior = _load_input_manifest(args.output) if args.incremental else None
-    if prior is not None and prior.get("snapshot_id") == snapshot:
+    recorded = _load_input_manifest(args.output)
+    prior = recorded if args.incremental else None
+    if prior is not None and (
+        prior["num_parts"] != args.num_parts or prior["finest"] != finest
+    ):
+        raise SystemExit(
+            f"{args.output} was rolled up with --num-parts {prior['num_parts']} "
+            f"and finest tier {prior['finest']}; an incremental refresh must "
+            f"keep them (got --num-parts {args.num_parts}, finest tier "
+            f"{finest}), or run a full rollup into a fresh output"
+        )
+    meta = _load_stage_meta(args.output, snapshot, recorded, args, finest)
+    if prior is not None and prior["snapshot_id"] == snapshot:
         print(f"rollup up to date: snapshot={snapshot} (no new data files)")
         return 0
-    incremental = bool(
-        prior is not None
-        and prior.get("num_parts") == args.num_parts
-        and prior.get("finest") == finest
-    )
-    manifest = load_manifest(ckpt) if (args.resume or incremental) else []
-    if not (args.resume or incremental) and load_manifest(ckpt):
+    incremental = prior is not None
+    manifest = load_manifest(ckpt)
+    if manifest and not (args.resume or incremental):
         raise SystemExit(
             f"manifest {ckpt} already exists; pass --resume to continue it"
         )
     if incremental:
-        # the ckpt is a lineage log across refreshes: records for COMPLETED
-        # snapshots (in the manifest's history) are fine, and records for
-        # the current snapshot are a resumable partial refresh — but records
-        # for any OTHER snapshot mean a refresh was interrupted and the
-        # input then grew again; merging on top of its partial tier writes
-        # would double-count that delta, so refuse.
-        known = set(prior.get("history", [prior["snapshot_id"]]))
-        stray = {r["snapshot_id"] for r in manifest} - known - {snapshot}
-        if stray:
-            raise SystemExit(
-                f"checkpoint {ckpt} holds ranges for interrupted snapshot(s) "
-                f"{sorted(stray)}; rerun --incremental with that exact input "
-                "to finish it, or run a full rollup into a fresh output"
-            )
+        # the ckpt is a lineage log across refreshes: this snapshot's records
+        # are the ranges an interrupted refresh already finished
         done = {
             int(r["part_key"]) for r in manifest if r["snapshot_id"] == snapshot
         }
@@ -488,7 +478,6 @@ def run(args) -> int:
     spark = get_spark(master=args.master, app_name="transcript-rollup")
 
     stage_dir = os.path.join(args.output, "_stage", f"snap={snapshot}")
-    meta = _load_stage_meta(stage_dir, snapshot, args, finest) if args.resume else None
     if meta is None:
         if incremental:
             meta = _build_stage_incremental(
@@ -539,19 +528,18 @@ def run(args) -> int:
         if owns_session:
             spark.stop()
         return 42
+    if args.archive:
+        _write_archive(spark, args, snapshot)
+    # record the fully-processed snapshot — the diff base for the next
+    # --incremental run (written for full runs too, so any full rollup
+    # bootstraps later increments) — and only then delete the stage: a
+    # crash in between leaves a stage the next run knows to be finished
+    _write_input_manifest(args.output, snapshot, entries, args.num_parts, finest)
     shutil.rmtree(stage_dir, ignore_errors=True)
     try:
         os.rmdir(os.path.dirname(stage_dir))  # drop _stage/ itself if empty
     except OSError:
         pass
-    if args.archive:
-        _write_archive(spark, args, snapshot)
-    # record the fully-processed snapshot — the diff base for the next
-    # --incremental run (written for full runs too, so any full rollup
-    # bootstraps later increments)
-    _write_input_manifest(
-        args.output, snapshot, entries, args.num_parts, finest, prior
-    )
     if owns_session:
         spark.stop()
     print(

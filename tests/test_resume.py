@@ -307,3 +307,134 @@ def test_archive_product_round_trips(spark, tiny_path, tmp_path):
     )
     for c in cols:
         assert np.array_equal(got[c].to_numpy(), want[c].to_numpy()), c
+
+
+def test_refresh_refuses_other_ranges_or_tier(tmp_path):
+    """A refresh keeps the recorded run's --num-parts and finest tier: asking
+    for others exits naming the recorded values and leaves the tiers as they
+    are, on an unchanged input as on a grown one."""
+    src = str(tmp_path / "three.parquet")
+    _write_small_input(src)
+    out = str(tmp_path / "out")
+    common = ["--input", src, "--output", out, "--master", "local[2]",
+              "--incremental"]
+    assert _run(common + ["--tiers", "1m,1h", "--num-parts", "4"]) == 0
+    before = _tier_files(out)
+    recorded = "--num-parts 4 and finest tier 1m"
+    with pytest.raises(SystemExit, match=recorded):
+        _run(common + ["--tiers", "1m,1h", "--num-parts", "8"])
+    with pytest.raises(SystemExit, match=recorded):
+        _run(common + ["--tiers", "1h,1d", "--num-parts", "4"])
+    assert _tier_files(out) == before
+
+
+def _grown_refresh(spark, tiny_path, tmp_path):
+    """Bootstraps a refresh output over the first 60% of every tiny
+    conversation but edge_hot (which adds run time and no coverage), then
+    appends the next 20% as new files. Returns the input dir, the output
+    dir, the refresh args and the last 20%, not yet appended."""
+    from pyspark.sql import Window
+    from pyspark.sql import functions as F
+
+    from features_engineering_of_motion_data_spark.sources.transcripts import (
+        read_transcripts,
+    )
+
+    d, out = str(tmp_path / "in"), str(tmp_path / "out")
+    turns = read_transcripts(spark, tiny_path).filter(F.col("conv_id") != "edge_hot")
+    last = F.max("turn_idx").over(Window.partitionBy("conv_id"))
+    tagged = turns.withColumn(
+        "_q",
+        (F.col("turn_idx") > (last * 0.6).cast("int")).cast("int")
+        + (F.col("turn_idx") > (last * 0.8).cast("int")).cast("int"),
+    )
+    slices = [tagged.filter(f"_q = {q}").drop("_q").repartition(2) for q in range(3)]
+    slices[0].write.parquet(d)
+    common = ["--input", d, "--output", out, "--tiers", ",".join(TIERS),
+              "--num-parts", "4", "--master", "local[4]", "--incremental"]
+    assert _run(common) == 0
+    slices[1].write.mode("append").parquet(d)
+    return d, out, common, slices[2]
+
+
+def _failed_refresh(spark, tiny_path, tmp_path, monkeypatch):
+    """:func:`_grown_refresh`, then a refresh whose tier write commits and
+    whose every record append fails."""
+    import jobs.rollup as rollup_job
+
+    grown = _grown_refresh(spark, tiny_path, tmp_path)
+
+    def failing(path, snapshot, part_key, *rest):
+        raise RuntimeError(f"injected failure in range {part_key}")
+
+    monkeypatch.setattr(rollup_job, "append_record", failing)
+    with pytest.raises(RuntimeError, match="injected failure"):
+        _run(grown[2])
+    monkeypatch.undo()
+    return grown
+
+
+def _assert_equals_full_run(d: str, out: str, full: str) -> None:
+    assert _run(["--input", d, "--output", full, "--tiers", ",".join(TIERS),
+                 "--num-parts", "4", "--master", "local[4]"]) == 0
+    a, b = _read_tiers(out), _read_tiers(full)
+    for t in TIERS:
+        assert len(a[t]) > 0
+        pd.testing.assert_frame_equal(a[t], b[t], check_exact=True)
+    assert not os.path.exists(os.path.join(out, "_stage"))
+
+
+def test_refresh_rerun_continues_its_stage(spark, tiny_path, tmp_path, monkeypatch):
+    """A refresh's tier write commits, then no record lands. The tiers now
+    hold the merged delta, so only the stage still holds the merge of the
+    parent tiers: a rerun on the same input, without --resume, continues
+    from it and equals a full run (a stage rebuilt from the merged tiers
+    would count the delta twice)."""
+    d, out, common, _rest = _failed_refresh(spark, tiny_path, tmp_path, monkeypatch)
+    assert _run(common) == 0
+    _assert_equals_full_run(d, out, str(tmp_path / "full"))
+
+
+def test_refresh_refuses_another_snapshots_stage(
+    spark, tiny_path, tmp_path, monkeypatch
+):
+    """Same failed refresh, then the input grows again: even with --resume,
+    the run refuses, naming the unfinished snapshot, and leaves every tier
+    file as it was."""
+    from features_engineering_of_motion_data_spark.sources.transcripts import (
+        resolve_snapshot,
+    )
+
+    d, out, common, rest = _failed_refresh(spark, tiny_path, tmp_path, monkeypatch)
+    unfinished = resolve_snapshot(d)
+    before = _tier_files(out)
+    rest.write.mode("append").parquet(d)
+    with pytest.raises(SystemExit, match=unfinished):
+        _run(common + ["--resume"])
+    assert _tier_files(out) == before
+
+
+def test_refresh_after_crash_before_stage_delete(
+    spark, tiny_path, tmp_path, monkeypatch
+):
+    """A refresh records its snapshot, then crashes before deleting its
+    stage. The next refresh, over a grown input, removes that finished
+    stage and equals a full run."""
+    import jobs.rollup as rollup_job
+
+    d, out, common, rest = _grown_refresh(spark, tiny_path, tmp_path)
+    real = rollup_job._write_input_manifest
+
+    def crashing(*a, **kw):
+        real(*a, **kw)
+        raise RuntimeError("injected crash after the manifest write")
+
+    monkeypatch.setattr(rollup_job, "_write_input_manifest", crashing)
+    with pytest.raises(RuntimeError, match="injected crash"):
+        _run(common)
+    monkeypatch.undo()
+    assert glob.glob(os.path.join(out, "_stage", "snap=*", "meta.json"))
+
+    rest.write.mode("append").parquet(d)
+    assert _run(common) == 0
+    _assert_equals_full_run(d, out, str(tmp_path / "full"))
